@@ -41,6 +41,7 @@ from apollo_spark.ops import dedup, multimodal, similarity, text
 from apollo_spark.stages import bags as bags_stage
 from apollo_spark.stages import candidates, cc as cc_stage, evalcc, hashst
 from apollo_spark.stages import validate as validate_stage
+from apollo_spark.util import widen_scan
 
 # ---------------------------------------------------------------- loaders
 
@@ -51,25 +52,6 @@ from apollo_spark.stages import validate as validate_stage
 # queries() first at a non-default sf gets a matching codebook instead
 # of a spurious hash mismatch.
 _GATE_SF_DIR: str | None = None
-
-
-def _scan_wide(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Input-parallelism floor (guide §2.5 'input skew: one huge
-    unsplittable file -> repartition immediately after the read'): the
-    testdata tables arrive as ONE parquet file with ONE row group, so a
-    scan cannot split below it and every narrow chain downstream — the
-    shingle explode + 8x md5 of the minhash ladder, the extraction
-    kernels — ran on ONE core until its first exchange (round-7
-    measurement: word_shingles noop 1.9 s at sf0.1, almost entirely the
-    single-task scan+explode+md5 span). Round-robin repartition to the
-    session's parallelism, applied ONLY when the scan is narrower: at
-    production scale a large table scans as thousands of splits already
-    and this is a no-op, and what it shuffles here is the raw input rows
-    themselves, once, before any row-multiplying transform."""
-    n = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    return df.repartition(n)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,7 +66,7 @@ def _docsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan serialized seconds of per-row work on one core. The sub-second
     scan+agg queries keep the bare scan: for them the extra exchange
     costs more than the parallelism buys (measured both ways, round 7)."""
-    return _scan_wide(_docs(spark, sf_dir), spark)
+    return widen_scan(_docs(spark, sf_dir))
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,22 +128,14 @@ def _flagship_bands(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
     consumers: the vocab agg and the kernel; per-partition row order —
     the doc-contiguity contract — survives a localCheckpoint). Falls
     back to the shuffle path when the vocabulary exceeds
-    cfg.mapside_vocab_max, exactly as the pipeline does."""
-    import numpy as np
-
+    cfg.mapside_vocab_max, exactly as the pipeline does
+    (hashst.signatures_auto)."""
     feats = bags_stage.extract_features(images, cfg).localCheckpoint()
     ndocs = images.count()
     vocab = bags_stage.vocab_table(feats, cfg).localCheckpoint()
-    if vocab.count() <= cfg.mapside_vocab_max:
-        vp = vocab.select("feat_hash", "df").toPandas()
-        vh = vp["feat_hash"].to_numpy().astype(np.int64).view(np.uint64)
-        vdf = vp["df"].to_numpy().astype(np.float64)
-        vo = np.argsort(vh)
-        sigs = hashst.signatures_mapside(feats, vh[vo], vdf[vo],
-                                         ndocs, cfg)
-    else:
-        sigs = hashst.signatures(
-            bags_stage.weight_bags(feats, vocab, ndocs, cfg), cfg)
+    sigs = hashst.signatures_auto(
+        feats, vocab, ndocs,
+        bags_stage.weight_bags(feats, vocab, ndocs, cfg), cfg)
     return hashst.bands(sigs, cfg)
 
 

@@ -46,6 +46,10 @@ from dataclasses import asdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# version of the incremental.delta_fingerprint formula that keys the
+# manifest's delta entries; entries of any other version are refused
+DELTA_FP_VERSION = 2
+
 
 class CheckpointCatalog:
     def __init__(self, spark: SparkSession, root: str, config,
@@ -230,20 +234,7 @@ class CheckpointCatalog:
             self._record_metrics(stage, time.time() - t0, files=[])
         else:
             if partition_by:
-                # a stage written by the empty-flat fallback (see write)
-                # holds a 0-row ROOT-LEVEL file; a partitioned append on
-                # top would mix layouts and break partition discovery on
-                # the next load (ADVICE r4). Only provably-empty root
-                # files are removed — a non-empty root file means the
-                # caller is appending partitioned onto an unpartitioned
-                # table, which deserves the loud failure it gets.
-                import glob
-
-                import pyarrow.parquet as pq
-                for f in glob.glob(
-                        os.path.join(self.path(stage), "*.parquet")):
-                    if pq.ParquetFile(f).metadata.num_rows == 0:
-                        os.remove(f)
+                self._drop_empty_root_files(stage)
             before = set(self._stage_files(stage))
             w = df.write.mode("append")
             if partition_by:
@@ -276,8 +267,8 @@ class CheckpointCatalog:
                              info: dict | None = None) -> DataFrame:
         """Dynamic partition overwrite: replace ONLY the partitions present
         in ``df``, leaving all other partitions' files untouched — the
-        O(affected) IO path for incremental cc updates (stages/cc.
-        incremental_components). Parquet uses
+        O(affected) IO path of an incremental append's cc and clusters
+        updates (incremental.append_images). Parquet uses
         spark.sql.sources.partitionOverwriteMode=dynamic; Iceberg uses the
         native DataFrameWriterV2.overwritePartitions(). CALLER CONTRACT:
         ``df`` must be materialized (localCheckpoint) if it reads from the
@@ -288,12 +279,7 @@ class CheckpointCatalog:
             df.writeTo(self._table(stage)).overwritePartitions()
             self._record_metrics(stage, time.time() - t0, files=[])
         else:
-            import glob
-            # a table written by the empty-flat fallback (see write) holds
-            # one ROOT-LEVEL 0-row file; drop it before the partitioned
-            # write or partition discovery would see a mixed layout
-            for f in glob.glob(os.path.join(self.path(stage), "*.parquet")):
-                os.remove(f)
+            self._drop_empty_root_files(stage)
             before = set(self._stage_files(stage))
             # per-WRITE dynamic mode (ADVICE r3): scoping the option to
             # this writer instead of mutating the session conf means a
@@ -318,6 +304,21 @@ class CheckpointCatalog:
                 entry.update(info)
             self._save_manifest(m)
         return self.load(stage)
+
+    def _drop_empty_root_files(self, stage: str) -> None:
+        """Before a partitioned parquet write: a stage written by the
+        empty-flat fallback (see write) holds a 0-row ROOT-LEVEL file, and
+        a partitioned write on top would mix layouts and break partition
+        discovery on the next load (ADVICE r4). Only provably-empty root
+        files are removed — a non-empty root file means the caller is
+        writing partitioned onto an unpartitioned table, which deserves
+        the loud failure it gets."""
+        import glob
+
+        import pyarrow.parquet as pq
+        for f in glob.glob(os.path.join(self.path(stage), "*.parquet")):
+            if pq.ParquetFile(f).metadata.num_rows == 0:
+                os.remove(f)
 
     def clear_partitions(self, stage: str, col: str,
                          values: list) -> None:
@@ -372,33 +373,24 @@ class CheckpointCatalog:
         self._save_manifest(m)
 
     # -- delta idempotency ---------------------------------------------------
-    @staticmethod
-    def _delta_entry(raw) -> dict:
-        """Manifest delta entries are {'state': ..., 'content': ...} dicts
-        (plain strings from pre-r3 manifests are upgraded on read)."""
-        if isinstance(raw, str):
-            return {"state": raw, "content": None}
-        return dict(raw or {})
+    def _deltas(self, m: dict) -> dict:
+        """The manifest's delta entries ({'state', 'content', 'kind',
+        'fp_version'} dicts keyed by incremental.delta_fingerprint's id).
+        Refuses the whole manifest if ANY entry has another shape or
+        fingerprint formula: that entry's batch would not be found under
+        its current id, so a replay of it would append its rows twice."""
+        deltas = m.setdefault("deltas", {})
+        for delta_id, entry in deltas.items():
+            if not isinstance(entry, dict) \
+                    or entry.get("fp_version") != DELTA_FP_VERSION:
+                raise ValueError(
+                    f"manifest delta {delta_id} at {self.root} was recorded "
+                    f"by an older delta format (want fp_version "
+                    f"{DELTA_FP_VERSION}) — rebuild the run")
+        return deltas
 
-    def resolve_delta_id(self, delta_id: str,
-                         legacy_ids: tuple[str, ...] = ()) -> str:
-        """The manifest key this batch should be tracked under: the
-        current-formula ``delta_id`` if the manifest knows it (or knows
-        nothing), else the first ``legacy_ids`` entry with recorded state.
-        The delta_id formula changed across rounds (v1 row-level xor ->
-        v2 multiplicity-keyed xor); without this probe a crash replay
-        spanning the upgrade would compute a fresh id, miss its own
-        committed/pending entry, and double-append (ADVICE r4 medium).
-        New entries always record under the CURRENT formula (plus
-        fp_version in begin_delta), so legacy resolution only ever fires
-        on pre-upgrade manifests."""
-        deltas = self._manifest().get("deltas", {})
-        if delta_id in deltas:
-            return delta_id
-        for lid in legacy_ids:
-            if lid in deltas:
-                return lid
-        return delta_id
+    def _delta_entry(self, delta_id: str) -> dict:
+        return dict(self._deltas(self._manifest()).get(delta_id) or {})
 
     def begin_delta(self, delta_id: str, content_fp: str | None = None,
                     retry_pending: bool = False,
@@ -419,17 +411,13 @@ class CheckpointCatalog:
         changed content is reported as such. On Iceberg the same contract is
         a MERGE on the delta id."""
         m = self._manifest()
-        deltas = m.setdefault("deltas", {})
-        entry = self._delta_entry(deltas.get(delta_id))
-        if entry.get("state") == "pending" and retry_pending \
-                and entry.get("kind") == "bootstrap" == kind:
-            # only a bootstrap may retry its own pending delta: every write
-            # on that path is an overwrite; a pending APPEND delta (or a
-            # pre-kind manifest entry) keeps the loud refusal below
-            deltas[delta_id] = {"state": "pending", "content": content_fp,
-                                "kind": kind, "fp_version": 2}
-            self._save_manifest(m)
-            return
+        deltas = self._deltas(m)
+        entry = deltas.get(delta_id) or {}
+        # only a bootstrap may retry its own pending delta: every write on
+        # that path is an overwrite; a pending APPEND delta keeps the loud
+        # refusal below
+        retry = retry_pending and entry.get("state") == "pending" \
+            and entry.get("kind") == "bootstrap" == kind
         if entry.get("state") == "committed":
             stored = entry.get("content")
             detail = (" with DIFFERENT content (changed-payload re-drop)"
@@ -438,42 +426,33 @@ class CheckpointCatalog:
             raise ValueError(
                 f"delta {delta_id} already applied{detail} — refusing "
                 f"duplicate append (rows would double)")
-        if entry.get("state") == "pending":
+        if entry.get("state") == "pending" and not retry:
             raise ValueError(
                 f"delta {delta_id} is pending from a crashed append — "
                 f"stage tables may hold a partial delta; reset and re-run")
-        # fp_version records which delta_fingerprint formula produced the
-        # key, so a future formula change can migrate or refuse explicitly
-        # instead of relying on the legacy-probe alone
         deltas[delta_id] = {"state": "pending", "content": content_fp,
-                            "kind": kind, "fp_version": 2}
+                            "kind": kind, "fp_version": DELTA_FP_VERSION}
         self._save_manifest(m)
 
     def delta_kind(self, delta_id: str) -> str | None:
         """'bootstrap' | 'append' | None — what path began this delta
-        (None for pre-r4 manifests, treated as append = non-retryable)."""
-        return self._delta_entry(
-            self._manifest().get("deltas", {}).get(delta_id)).get("kind")
+        (None for an unknown delta)."""
+        return self._delta_entry(delta_id).get("kind")
 
     def commit_delta(self, delta_id: str) -> None:
         m = self._manifest()
-        deltas = m.setdefault("deltas", {})
-        entry = self._delta_entry(deltas.get(delta_id))
-        entry["state"] = "committed"
-        deltas[delta_id] = entry
+        self._deltas(m)[delta_id]["state"] = "committed"
         self._save_manifest(m)
 
     def delta_state(self, delta_id: str) -> str | None:
         """'pending' | 'committed' | None — read-only probe used by the
         streaming ingest to skip crash-replayed batches idempotently."""
-        return self._delta_entry(
-            self._manifest().get("deltas", {}).get(delta_id)).get("state")
+        return self._delta_entry(delta_id).get("state")
 
     def delta_content(self, delta_id: str) -> str | None:
         """The payload fingerprint recorded when the delta began (None for
-        pre-r3 manifests or deltas begun without one)."""
-        return self._delta_entry(
-            self._manifest().get("deltas", {}).get(delta_id)).get("content")
+        an unknown delta or one begun without it)."""
+        return self._delta_entry(delta_id).get("content")
 
     # -- lineage + metrics ---------------------------------------------------
     def _stage_files(self, stage: str) -> list[str]:

@@ -20,12 +20,14 @@ Cassandra writes (bags.py:23, hasher.py:186-201), hashes-only resetdb
      only (candidates.simhash_pairs_delta), and substring fingerprints are
      extracted for the delta alone and appended to the checkpointed
      fingerprint table;
-  5. warm-start CC from the previous fixpoint (stages/cc.
-     incremental_components): a converged labeling is a spanning star of
-     each old component, so the fixpoint re-runs only over delta-touched
-     buckets plus the old components they collide with; clusters re-derive
-     from the merged labels, and only the genuinely cheap derived stages
-     (substring census, refinement, eval) rebuild.
+  5. warm-start CC from the previous labeling (stages/cc.
+     incremental_components_parts): a converged labeling is a spanning
+     star of each old component, so CC re-runs only over delta-touched
+     buckets plus the old components they collide with, through the same
+     size-gated dispatcher as a full build; the hash-partitioned cc and
+     clusters tables dynamic-overwrite only the partitions of the affected
+     components, and only the genuinely cheap derived stages (substring
+     census, refinement, eval) rebuild.
 
 Cost per delta: O(|delta|) extraction+hashing + narrow corpus-side scans
 (two-column phash projection; compact fingerprint/bands tables for the
@@ -42,19 +44,17 @@ from pyspark.sql import functions as F
 from apollo_spark.checkpoint import CheckpointCatalog
 from apollo_spark.config import PipelineConfig
 from apollo_spark.stages import bags as bags_stage
-from apollo_spark.stages import candidates, hashst
+from apollo_spark.stages import candidates, cc as cc_stage, hashst
 
 # stages rebuilt per delta (cheap, derived from checkpointed inputs);
 # simhash_pairs / substring_fp are appended, cc / clusters are updated
-# INCREMENTALLY (warm-start fixpoint) unless the base run predates the
-# incremental layout
+# INCREMENTALLY (warm-start CC + partition overwrite)
 DERIVED_STAGES = ["substring_membership", "clusters_refined",
                   "cluster_eval"]
 
 
-def delta_fingerprint(new_images: DataFrame) \
-        -> tuple[str, str, tuple[str, ...]]:
-    """(delta_id, content_fp, legacy_ids) — order-insensitive identity of
+def delta_fingerprint(new_images: DataFrame) -> tuple[str, str]:
+    """(delta_id, content_fp) — order-insensitive identity of
     a delta in two distributed aggs, no collect. ``delta_id`` identifies
     the BATCH: a crash-replayed micro-batch maps to the same manifest
     entry. ``content_fp`` additionally folds caption, phash and the image
@@ -65,16 +65,9 @@ def delta_fingerprint(new_images: DataFrame) \
     cancels even-multiplicity rows, so {x,x,y} and {w,w,y} aliased to the
     same fingerprint and the second batch was silently skipped) — the
     per-id pre-agg keys the xor on xxhash64(id, count) instead. Shared by
-    the batch append and the streaming ingest.
-
-    ``legacy_ids`` carries this batch's id under EVERY superseded formula
-    (currently v1: row-level bit_xor(xxhash64(image_id)), used through the
-    round-2 layout — per id that is one xxhash64(id) term iff its
-    multiplicity is odd). Callers resolve against the manifest with
-    CheckpointCatalog.resolve_delta_id before any state probe, so a batch
-    committed (or left pending) by a pre-upgrade run is still recognized
-    after the formula change instead of silently dispatching to the append
-    path and double-appending (ADVICE r4 medium)."""
+    the batch append and the streaming ingest. The manifest records the
+    formula as ``fp_version`` (checkpoint.DELTA_FP_VERSION); a manifest
+    holding an entry of another version is refused."""
     per_row = (new_images
                .select("image_id",
                        F.xxhash64("image_id", "caption", "phash", "bytes")
@@ -90,15 +83,10 @@ def delta_fingerprint(new_images: DataFrame) \
     fp_row = per_id.agg(
         F.expr("bit_xor(xxhash64(image_id, mult))").alias("s"),
         F.sum("mult").alias("n"),
-        F.expr("bit_xor(xxhash64(image_id, ch, mult))").alias("c"),
-        # v1 id: xor of xxhash64(id) over ROWS — even multiplicity cancels
-        F.expr("bit_xor(CASE WHEN mult % 2 = 1 THEN xxhash64(image_id) "
-               "ELSE CAST(0 AS BIGINT) END)").alias("s1")).first()
+        F.expr("bit_xor(xxhash64(image_id, ch, mult))").alias("c")).first()
     mask = 0xFFFFFFFFFFFFFFFF
-    n = fp_row["n"]
-    return (f"{int(fp_row['s'] or 0) & mask:x}-{n}",
-            f"{int(fp_row['c'] or 0) & mask:x}",
-            (f"{int(fp_row['s1'] or 0) & mask:x}-{n}",))
+    return (f"{int(fp_row['s'] or 0) & mask:x}-{fp_row['n']}",
+            f"{int(fp_row['c'] or 0) & mask:x}")
 
 
 def append_images(spark: SparkSession, all_images: DataFrame | None,
@@ -116,12 +104,26 @@ def append_images(spark: SparkSession, all_images: DataFrame | None,
     begin/commit window and the extended stage table becomes the corpus
     (the streaming-ingest path: no caller-held corpus handle needed).
     Returns the same {stage: DataFrame} dict as run_pipeline.
+
+    Refuses, before any write, a base run whose complete cc or clusters
+    checkpoint lacks the hash-partitioned layout (cc_layout ==
+    stages.cc.CC_LAYOUT): the partitioned writes below would mix hive
+    directories into that flat table and break its next load. Such a run
+    must be rebuilt (reset + run_pipeline).
     """
     if all_images is None and not append_images_stage:
         raise ValueError("all_images=None requires append_images_stage")
     cat = CheckpointCatalog(spark, out_dir, cfg, backend=backend)
     if not cat.is_complete("vocab") or not cat.is_complete("bands"):
         raise ValueError(f"no completed base run at {out_dir}")
+    for st in ("cc", "clusters"):
+        if cat.is_complete(st) \
+                and cat.stage_info(st).get("cc_layout") \
+                != cc_stage.CC_LAYOUT:
+            raise ValueError(
+                f"{st} checkpoint at {out_dir} lacks the partitioned "
+                f"layout {cc_stage.CC_LAYOUT!r} — rebuild the run (reset + "
+                f"run_pipeline) before appending")
     with cat.batched_catalog():
         return _append_images_batched(
             spark, cat, all_images, new_images, cfg, out_dir,
@@ -159,11 +161,8 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
     # delta identity recorded pending -> committed in the manifest so a
     # duplicate invocation is refused and a crash between the stage appends
     # is detectable (ADVICE r1: non-atomic appends silently duplicated
-    # rows). resolve_delta_id maps the batch onto a manifest entry written
-    # under a superseded fingerprint formula (ADVICE r4 medium) so the
-    # refusals fire across the upgrade too.
-    delta_id, content_fp, legacy = delta_fingerprint(new_images)
-    delta_id = cat.resolve_delta_id(delta_id, legacy)
+    # rows).
+    delta_id, content_fp = delta_fingerprint(new_images)
     cat.begin_delta(delta_id, content_fp, kind="append")
     _mark("fingerprint")
 
@@ -184,9 +183,9 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
     if extensions and cat.is_complete("simhash_pairs") \
             and cat.is_complete("substring_fp"):
         # O(|delta|) extension appends (module docstring step 4). A base
-        # run built with extensions=False (or pre-r3 layout) has the
-        # stages incomplete — run_pipeline below then builds them fully
-        # over the extended corpus (the correct fallback). An EMPTY delta
+        # run built with extensions=False has the stages incomplete —
+        # run_pipeline below then builds them fully over the extended
+        # corpus (the correct fallback). An EMPTY delta
         # pass skips its append outright (appending zero rows is a no-op
         # on content but still costs a write + catalog op — part of the
         # fixed per-append overhead being shaved this round); the
@@ -201,11 +200,14 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
             cat.append("substring_fp", delta_fp)
     _mark("extensions")
 
-    # incremental CC (stages/cc.incremental_components): warm-start from
-    # the previous fixpoint, iterating ONLY over delta-touched buckets and
-    # the old components they collide with — the corpus-sized fixpoint is
-    # gone from the append path. Falls back to a full rebuild when the
-    # base run predates the incremental layout.
+    # incremental CC (stages/cc.incremental_components_parts): warm-start
+    # from the previous fixpoint over ONLY delta-touched buckets and the
+    # old components they collide with — the corpus-sized CC is gone from
+    # the append path — then dynamic-overwrite just the touched partitions
+    # of the cc and clusters tables. A base run without a cc checkpoint,
+    # or built with extensions=False while this append runs them, has cc
+    # and clusters reset instead and the trailing run_pipeline rebuilds
+    # them over the extended corpus.
     #
     # CRASH-WINDOW ORDERING: the derived-stage invalidation AND the
     # incremental cc/clusters writes happen INSIDE the pending window,
@@ -214,7 +216,6 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
     # STALE-but-complete clusters and silently skipping (the old ordering
     # committed first — a crash before the reset left old clusters marked
     # complete over a corpus that already contained the delta's rows).
-    from apollo_spark.stages import cc as cc_stage
     can_inc_cc = cat.is_complete("cc") and (
         not extensions or new_pairs is not None)
     if can_inc_cc:
@@ -229,198 +230,161 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
                                               "left_semi"), cfg)
             memb = memb.unionByName(m2).unionByName(
                 candidates.pairs_as_membership(new_pairs))
-        affected, relabeled, singles, small = \
+        affected, relabeled, singles, rel_local = \
             cc_stage.incremental_components_parts(
                 old_cc, cc_stage.star_edges(memb),
                 new_images.select("image_id"), cfg)
         _mark("inc_cc")
         cat.reset([s for s in DERIVED_STAGES])
-        if cat.stage_info("cc").get("cc_layout") == cc_stage.CC_LAYOUT:
-            # O(affected + |delta|) IO, three writes (cc overwrite,
-            # singles append, clusters overwrite) — semantics unchanged
-            # from round 6, but the phase's JOB COUNT is restructured
-            # (VERDICT r6 #1: cc_write was 7.5-9.5 s of a ~20 s append,
-            # nearly all fixed per-job overhead, not bytes):
-            #   * when the union-find short-circuit engaged (``small`` —
-            #     the steady-state micro-append), ``relabeled`` is a
-            #     local relation and ``affected`` is bounded by the edge
-            #     cap: ONE bounded collect fetches the affected ids, and
-            #     the touched-partition set is computed DRIVER-side with
-            #     the xxhash64 twin (bit-parity with Spark's string
-            #     xxhash64 is pytest-pinned) — the old
-            #     affected-lc + relabeled-lc + touched-distinct-collect
-            #     job triple disappears;
-            #   * cc content, the singles append input and the clusters
-            #     content all read PRE-overwrite tables, so they
-            #     materialize in ONE tagged-union localCheckpoint
-            #     instead of three separate ones, and both
-            #     present-partition sets come from ONE collect over that
-            #     checkpoint (round 6's collect-to-driver A/B rejected
-            #     replacing DISTRIBUTED work with collects; this keeps
-            #     every distributed piece distributed and only merges
-            #     the blocking materialization points).
-            spark_s = new_images.sparkSession
-            parts_n = cfg.cc_table_partitions
-            rel_local = getattr(relabeled, "_apollo_local_rows", None)
-            relabeled = cc_stage.with_cc_partition(relabeled, cfg)
-            singles = cc_stage.with_cc_partition(singles, cfg)
-            if small and rel_local is not None:
-                import pandas as pd
+        # O(affected + |delta|) IO, three writes (cc overwrite, singles
+        # append, clusters overwrite), with the phase's JOB COUNT kept low
+        # (VERDICT r6 #1: cc_write was 7.5-9.5 s of a ~20 s append, nearly
+        # all fixed per-job overhead, not bytes):
+        #   * when the union-find ran (``rel_local`` — the steady-state
+        #     micro-append), ``relabeled`` is a local relation and
+        #     ``affected`` is bounded by the edge cap: ONE bounded collect
+        #     fetches the affected ids, and the touched-partition set is
+        #     computed DRIVER-side with the xxhash64 twin (bit-parity with
+        #     Spark's string xxhash64 is pytest-pinned);
+        #   * cc content, the singles append input and the clusters
+        #     content all read PRE-overwrite tables, so they materialize
+        #     in ONE tagged-union localCheckpoint instead of three separate
+        #     ones, and both present-partition sets come from ONE collect
+        #     over that checkpoint (round 6's collect-to-driver A/B
+        #     rejected replacing DISTRIBUTED work with collects; this
+        #     keeps every distributed piece distributed and only merges
+        #     the blocking materialization points).
+        spark_s = new_images.sparkSession
+        parts_n = cfg.cc_table_partitions
+        relabeled = cc_stage.with_cc_partition(relabeled, cfg)
+        singles = cc_stage.with_cc_partition(singles, cfg)
+        if rel_local is not None:
+            import pandas as pd
 
-                from apollo_spark.core.xxh import xxhash64_str
-                aff_ids = sorted(r["cc_id"] for r in affected.collect())
-                affected = spark_s.createDataFrame(
-                    pd.DataFrame({"cc_id": aff_ids}), "cc_id string") \
-                    if aff_ids else spark_s.createDataFrame(
-                        [], "cc_id string")
-                # touched set computed entirely driver-side: the union-find
-                # labels are already local rows, and Python's % on the
-                # xxhash64 twin IS Spark's pmod for positive moduli
-                touched = ({xxhash64_str(c) % parts_n for c in aff_ids}
-                           | {xxhash64_str(cc) % parts_n
-                              for _n, cc in rel_local})
-                # clusters rows for the relabeled components, also driver-
-                # side (n >= 2 filter + xxhash64 surrogate id — the same
-                # math with_clusters_partition/clusters express in SQL;
-                # xxhash64 twin parity is pytest-pinned), sparing the
-                # combined materialization job a groupBy+join subtree
-                from collections import Counter
-                ccnt = Counter(cc for _n, cc in rel_local)
-                cl_schema = ("cluster_id long, rep string, "
-                             "image_id string, p int")
-                cl_rows = [(xxhash64_str(cc), cc, img,
-                            xxhash64_str(cc) % parts_n)
-                           for img, cc in rel_local if ccnt[cc] >= 2]
-                new_cl = spark_s.createDataFrame(
-                    pd.DataFrame(cl_rows, columns=[
-                        "cluster_id", "rep", "image_id", "p"]),
-                    cl_schema) if cl_rows else \
-                    spark_s.createDataFrame([], cl_schema)
-            else:
-                affected = affected.localCheckpoint()
-                relabeled = relabeled.localCheckpoint()
-                touched = {r["p"] for r in relabeled.select("p")
-                           .unionByName(cc_stage.with_cc_partition(
-                               affected, cfg).select("p"))
-                           .distinct().collect()}
-                new_cl = cc_stage.with_clusters_partition(
-                    cc_stage.clusters(
-                        relabeled.select("image_id", "cc_id")), cfg)
-            cl_incremental = touched and cat.is_complete("clusters") and \
-                cat.stage_info("clusters").get("cc_layout") == \
-                cc_stage.CC_LAYOUT
-            # one tagged union materializes every pre-overwrite read
-            CC_T, SGL_T, CL_T = 0, 1, 2
-            pieces = [singles.withColumn("_t", F.lit(SGL_T))]
-            if touched:
-                pieces.append(
-                    (cat.load("cc")
-                     .filter(F.col("p").isin(sorted(touched)))
-                     .join(affected, "cc_id", "left_anti")
-                     .unionByName(relabeled))
-                    .withColumn("_t", F.lit(CC_T)))
-            if cl_incremental:
-                aff_rep = affected.select(F.col("cc_id").alias("rep"))
-                pieces.append(
-                    (cat.load("clusters")
-                     .filter(F.col("p").isin(sorted(touched)))
-                     .join(aff_rep, "rep", "left_anti")
-                     .unionByName(new_cl))
-                    .withColumn("_t", F.lit(CL_T)))
-            combined = pieces[0]
-            for p_ in pieces[1:]:
-                combined = combined.unionByName(
-                    p_, allowMissingColumns=True)
-            combined = combined.localCheckpoint()
-            present = {(r["_t"], r["p"]) for r in
-                       combined.select("_t", "p").distinct().collect()}
-            cc_cols = ["image_id", "cc_id", "p"]
-            cl_cols = ["cluster_id", "rep", "image_id", "p"]
-
-            # each written frame is repartitioned BY p with a pinned
-            # partition count before its write (same device and rationale
-            # as run_pipeline's cc stage): one file per touched hive dir
-            # instead of (tasks x dirs) small files — the combined
-            # checkpoint carries ~100+ partitions and the fan-out showed
-            # up both in the write and in every later scan of the table
-            def _write_cc_overwrite():
-                # dynamic overwrite replaces only partitions PRESENT in
-                # the written df — a touched partition whose every row
-                # relabeled away (no survivor, new labels hash elsewhere)
-                # would keep its stale files and duplicate those members
-                # (ADVICE r3 high). Clear the difference explicitly,
-                # inside the pending window.
-                cat.clear_partitions(
-                    "cc", "p", sorted(touched - {p for t, p in present
-                                                 if t == CC_T}))
-                cat.overwrite_partitions(
-                    "cc", combined.filter(F.col("_t") == CC_T)
-                    .select(*cc_cols).repartition(parts_n, "p"), ["p"],
-                    info={"cc_layout": cc_stage.CC_LAYOUT})
-
-            def _write_cc_singles():
-                cat.append("cc", combined.filter(F.col("_t") == SGL_T)
-                           .select(*cc_cols).repartition(parts_n, "p"),
-                           partition_by=["p"])
-
-            def _write_clusters():
-                cat.clear_partitions(
-                    "clusters", "p",
-                    sorted(touched - {p for t, p in present
-                                      if t == CL_T}))
-                cat.overwrite_partitions(
-                    "clusters", combined.filter(F.col("_t") == CL_T)
-                    .select(*cl_cols).repartition(parts_n, "p"), ["p"],
-                    info={"cc_layout": cc_stage.CC_LAYOUT})
-
-            # The cc writes and the clusters write touch DISJOINT
-            # directories and both read the same materialized checkpoint
-            # — overlap them (guide §2.6: actions are only sequential
-            # because driver code calls them sequentially); the
-            # catalog's manifest and metrics mutations are serialized by
-            # its internal lock. WITHIN the cc stage the order matters:
-            # the dynamic overwrite deletes every file of a partition
-            # dir it rewrites, so the singles append (whose rows can
-            # hash into a touched partition) must commit strictly AFTER
-            # it — overwrite-then-append stays one sequential task.
-            def _write_cc():
-                if touched:
-                    _write_cc_overwrite()
-                _write_cc_singles()
-
-            tasks = [_write_cc]
-            if cl_incremental:
-                tasks.append(_write_clusters)
-            if len(tasks) == 1:
-                tasks[0]()
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-                with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-                    for f in [pool.submit(t) for t in tasks]:
-                        f.result()   # propagate the first failure
-            if not cl_incremental and (
-                    not cat.is_complete("clusters")
-                    or cat.stage_info("clusters").get("cc_layout")
-                    != cc_stage.CC_LAYOUT):
-                # pre-layout clusters checkpoint: full rewrite from the
-                # (post-write) cc table, as before
-                cat.write("clusters", cc_stage.with_clusters_partition(
-                    cc_stage.clusters(
-                        cat.load("cc").select("image_id", "cc_id")),
-                    cfg), partition_by=["p"],
-                    info={"cc_layout": cc_stage.CC_LAYOUT})
+            from apollo_spark.core.xxh import xxhash64_str
+            aff_ids = sorted(r["cc_id"] for r in affected.collect())
+            affected = spark_s.createDataFrame(
+                pd.DataFrame({"cc_id": aff_ids}), "cc_id string") \
+                if aff_ids else spark_s.createDataFrame([], "cc_id string")
+            # touched set computed entirely driver-side: the union-find
+            # labels are already local rows, and Python's % on the
+            # xxhash64 twin IS Spark's pmod for positive moduli
+            touched = ({xxhash64_str(c) % parts_n for c in aff_ids}
+                       | {xxhash64_str(cc) % parts_n
+                          for _n, cc in rel_local})
+            # clusters rows for the relabeled components, also driver-side
+            # (n >= 2 filter + xxhash64 surrogate id — the same math
+            # with_clusters_partition/clusters express in SQL; xxhash64
+            # twin parity is pytest-pinned), sparing the combined
+            # materialization job a groupBy+join subtree
+            from collections import Counter
+            ccnt = Counter(cc for _n, cc in rel_local)
+            cl_schema = "cluster_id long, rep string, image_id string, p int"
+            cl_rows = [(xxhash64_str(cc), cc, img,
+                        xxhash64_str(cc) % parts_n)
+                       for img, cc in rel_local if ccnt[cc] >= 2]
+            new_cl = spark_s.createDataFrame(
+                pd.DataFrame(cl_rows, columns=[
+                    "cluster_id", "rep", "image_id", "p"]),
+                cl_schema) if cl_rows else \
+                spark_s.createDataFrame([], cl_schema)
         else:
-            # pre-partitioned-layout checkpoint: full rewrite fallback
-            unaffected = old_cc.join(affected, "cc_id", "left_anti")
-            new_cc = cc_stage.with_cc_partition(
-                unaffected.unionByName(relabeled).unionByName(singles),
-                cfg).localCheckpoint()
-            cat.write("cc", new_cc, partition_by=["p"],
-                      info={"cc_layout": cc_stage.CC_LAYOUT})
-            cat.write("clusters", cc_stage.with_clusters_partition(
-                cc_stage.clusters(new_cc.select("image_id", "cc_id")),
-                cfg), partition_by=["p"],
-                info={"cc_layout": cc_stage.CC_LAYOUT})
+            affected = affected.localCheckpoint()
+            relabeled = relabeled.localCheckpoint()
+            touched = {r["p"] for r in relabeled.select("p")
+                       .unionByName(cc_stage.with_cc_partition(
+                           affected, cfg).select("p"))
+                       .distinct().collect()}
+            new_cl = cc_stage.with_clusters_partition(
+                cc_stage.clusters(relabeled.select("image_id", "cc_id")),
+                cfg)
+        # an incomplete clusters stage is left to the trailing run_pipeline,
+        # which derives it from the updated cc table
+        cl_incremental = touched and cat.is_complete("clusters")
+        # one tagged union materializes every pre-overwrite read
+        CC_T, SGL_T, CL_T = 0, 1, 2
+        pieces = [singles.withColumn("_t", F.lit(SGL_T))]
+        if touched:
+            pieces.append(
+                (cat.load("cc")
+                 .filter(F.col("p").isin(sorted(touched)))
+                 .join(affected, "cc_id", "left_anti")
+                 .unionByName(relabeled))
+                .withColumn("_t", F.lit(CC_T)))
+        if cl_incremental:
+            aff_rep = affected.select(F.col("cc_id").alias("rep"))
+            pieces.append(
+                (cat.load("clusters")
+                 .filter(F.col("p").isin(sorted(touched)))
+                 .join(aff_rep, "rep", "left_anti")
+                 .unionByName(new_cl))
+                .withColumn("_t", F.lit(CL_T)))
+        combined = pieces[0]
+        for p_ in pieces[1:]:
+            combined = combined.unionByName(p_, allowMissingColumns=True)
+        combined = combined.localCheckpoint()
+        present = {(r["_t"], r["p"]) for r in
+                   combined.select("_t", "p").distinct().collect()}
+        cc_cols = ["image_id", "cc_id", "p"]
+        cl_cols = ["cluster_id", "rep", "image_id", "p"]
+
+        # each written frame is repartitioned BY p with a pinned partition
+        # count before its write (same device and rationale as
+        # run_pipeline's cc stage): one file per touched hive dir instead
+        # of (tasks x dirs) small files — the combined checkpoint carries
+        # ~100+ partitions and the fan-out showed up both in the write and
+        # in every later scan of the table
+        def _write_cc_overwrite():
+            # dynamic overwrite replaces only partitions PRESENT in the
+            # written df — a touched partition whose every row relabeled
+            # away (no survivor, new labels hash elsewhere) would keep its
+            # stale files and duplicate those members (ADVICE r3 high).
+            # Clear the difference explicitly, inside the pending window.
+            cat.clear_partitions(
+                "cc", "p", sorted(touched - {p for t, p in present
+                                             if t == CC_T}))
+            cat.overwrite_partitions(
+                "cc", combined.filter(F.col("_t") == CC_T)
+                .select(*cc_cols).repartition(parts_n, "p"), ["p"])
+
+        def _write_cc_singles():
+            cat.append("cc", combined.filter(F.col("_t") == SGL_T)
+                       .select(*cc_cols).repartition(parts_n, "p"),
+                       partition_by=["p"])
+
+        def _write_clusters():
+            cat.clear_partitions(
+                "clusters", "p",
+                sorted(touched - {p for t, p in present if t == CL_T}))
+            cat.overwrite_partitions(
+                "clusters", combined.filter(F.col("_t") == CL_T)
+                .select(*cl_cols).repartition(parts_n, "p"), ["p"])
+
+        # The cc writes and the clusters write touch DISJOINT directories
+        # and both read the same materialized checkpoint — overlap them
+        # (guide §2.6: actions are only sequential because driver code
+        # calls them sequentially); the catalog's manifest and metrics
+        # mutations are serialized by its internal lock. WITHIN the cc
+        # stage the order matters: the dynamic overwrite deletes every
+        # file of a partition dir it rewrites, so the singles append
+        # (whose rows can hash into a touched partition) must commit
+        # strictly AFTER it — overwrite-then-append stays one sequential
+        # task.
+        def _write_cc():
+            if touched:
+                _write_cc_overwrite()
+            _write_cc_singles()
+
+        tasks = [_write_cc]
+        if cl_incremental:
+            tasks.append(_write_clusters)
+        if len(tasks) == 1:
+            tasks[0]()
+        else:
+            from concurrent.futures import ThreadPoolExecutor
+            with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+                for f in [pool.submit(t) for t in tasks]:
+                    f.result()   # propagate the first failure
     else:
         cat.reset([s for s in DERIVED_STAGES] + ["cc", "clusters"])
     cat.commit_delta(delta_id)

@@ -374,5 +374,6 @@ def connected_components_pairs(pairs: DataFrame,
              # graph) reads the persisted partitions instead of re-running
              # the candidate+verify chain
              .localCheckpoint(eager=False))
-    return cc_stage.components_from_edges(
+    labels, _ = cc_stage.components_from_edges(
         edges, max_iter, out_schema="doc_id long, cc_id long")
+    return labels

@@ -124,22 +124,9 @@ def _run_stages(spark: SparkSession, images: DataFrame,
         bags_fresh = not cat.is_complete("bags")
         stage("bags", lambda: bags_stage.weight_bags(
             feats, out["vocab"], ndocs, cfg))
-        if bags_fresh and out["vocab"].count() <= cfg.mapside_vocab_max:
-            # shuffle-free path: vocabulary pruning + weighting happen
-            # inside the kernel against a broadcast (hash, df) array pair
-            # (the guard above bounds its size), docs stay contiguous
-            # through the narrow extraction lineage, no join and no
-            # groupBy anywhere (see hashst.signatures_mapside for why a
-            # Catalyst join is order-unsafe)
-            import numpy as np
-            vp = out["vocab"].select("feat_hash", "df").toPandas()
-            vh = vp["feat_hash"].to_numpy().astype(np.int64).view(np.uint64)
-            vdf = vp["df"].to_numpy().astype(np.float64)
-            vorder = np.argsort(vh)
-            stage("signatures", lambda: hashst.signatures_mapside(
-                feats, vh[vorder], vdf[vorder], ndocs, cfg))
-        else:
-            stage("signatures", lambda: hashst.signatures(out["bags"], cfg))
+        stage("signatures", lambda: hashst.signatures_auto(
+            feats if bags_fresh else None, out["vocab"], ndocs,
+            out["bags"], cfg))
     finally:
         # the extension thread must finish BEFORE feats unpersists only if
         # it shared feats — it does not; but a raise above must still

@@ -134,7 +134,8 @@ def label_fixpoint(edges: DataFrame, max_iter: int) -> DataFrame:
     it and a lazy lineage would re-run per round.
 
     Exchange-reduced loop (round-6 fixpoint-floor work, measured −29% at
-    local[4] on the 677k-edge 480k-corpus graph, tools/fixpoint_ab.py):
+    local[4] on the 677k-edge 480k-corpus graph against the previous
+    loop, which re-shuffled the edge list every round):
 
       * the symmetric edge list is repartitioned by ``src`` ONCE and
         checkpointed — localCheckpoint preserves outputPartitioning, so
@@ -152,7 +153,7 @@ def label_fixpoint(edges: DataFrame, max_iter: int) -> DataFrame:
 
     A fused two-rounds-per-barrier variant was tried and REJECTED:
     23.5 s vs 9.6 s on the same input — the doubled-depth job costs more
-    than the saved convergence count (fixpoint_ab.py --impl v3)."""
+    than the saved convergence count."""
     spark = edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym, labels = fixpoint_state(edges, npart)
@@ -186,48 +187,6 @@ def label_fixpoint(edges: DataFrame, max_iter: int) -> DataFrame:
     return labels.withColumnRenamed("label", "cc_id")
 
 
-def incremental_components(old_cc: DataFrame, new_edges: DataFrame,
-                           new_ids: DataFrame, cfg: PipelineConfig
-                           ) -> DataFrame:
-    """Warm-start CC for an incremental append: merge ``new_edges`` (star
-    edges from delta-touched buckets + delta pair edges) into a CORRECT
-    previous fixpoint ``old_cc`` without re-running CC over the corpus.
-
-    The device: a converged labeling IS a spanning star of each old
-    component (every member points at its cc_id, itself a member), so the
-    union graph (old graph + new edges) is connectivity-equivalent to
-    (old-label star edges + new edges). Restricting further to AFFECTED
-    components — those containing an endpoint of a new edge — leaves the
-    untouched corpus out of the fixpoint entirely:
-
-      affected  = old components incident to new_edges
-      fixpoint over: new_edges  UNION  (star edges of affected components)
-      result    = unaffected old labels  UNION  fixpoint labels
-                  UNION singletons for delta ids in no multi bucket
-
-    Exactness: identical to a full rebuild's partition (the fixpoint's
-    min-label = global min image_id of the merged component, which is also
-    what the full rebuild emits), proven by the append==rebuild parity
-    test. COMPUTE per delta: O(|new_edges| + |affected components|) — the
-    corpus-sized fixpoint is gone from the append path; ``affected`` is
-    tiny, so AQE broadcasts it and the old_cc semi/anti joins are plain
-    scans, no shuffle.
-
-    Honest IO note: the caller still rewrites the cc TABLE per delta,
-    which is O(corpus) output IO even though only affected rows changed.
-    At checkpoint-table scale that is the remaining append cost; the
-    remedies are storage-level, not algorithmic — an Iceberg MERGE INTO
-    over the affected rows, or a cc table hash-partitioned on cc_id with
-    dynamic partition overwrite of the touched partitions (old labels'
-    partitions ∪ new labels' partitions, stale rows removed with the
-    rewrite). The parquet backend keeps the simple full rewrite.
-    """
-    affected, relabeled, singles, _small = incremental_components_parts(
-        old_cc, new_edges, new_ids, cfg)
-    unaffected = old_cc.join(affected, "cc_id", "left_anti")
-    return unaffected.unionByName(relabeled).unionByName(singles)
-
-
 # Small-graph short-circuit bound: <= this many edges -> driver-side
 # union-find (one bounded limit-collect job) instead of the round-barriered
 # distributed fixpoint. SCALE-ADAPTIVE dispatch on DATA size, not core
@@ -245,17 +204,17 @@ CC_DRIVER_EDGES_MAX = int(
     _os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "100000"))
 
 
-def _labels_driver_side(spark, rows, id_col: str = "image_id",
-                        rep_col: str = "rep",
+def _labels_driver_side(spark, rows,
                         out_schema: str = "image_id string, cc_id string"
-                        ) -> DataFrame:
+                        ) -> tuple[DataFrame, list[tuple]]:
     """Union-find over an already-COLLECTED edge list -> the same
-    (node, cc_id = min member id) labeling label_fixpoint converges to.
-    Only called under CC_DRIVER_EDGES_MAX (the caller's bounded
-    limit-collect caps it at a few MB of id pairs); path-halving find
-    keeps it near-linear. Ids may be strings or ints — Python min ==
-    F.min for both. The result is a LOCAL relation — downstream consumers
-    can collect or join it without re-running any corpus scan."""
+    (node, cc_id = min member id) labeling label_fixpoint converges to,
+    as (LOCAL relation, the same rows as Python tuples). Only called
+    under CC_DRIVER_EDGES_MAX (the caller's bounded limit-collect caps it
+    at a few MB of id pairs); path-halving find keeps it near-linear. Ids
+    may be strings or ints — Python min == F.min for both. Downstream
+    consumers can collect or join the relation without re-running any
+    corpus scan."""
     parent: dict = {}
 
     def find(x):
@@ -267,7 +226,7 @@ def _labels_driver_side(spark, rows, id_col: str = "image_id",
         return r
 
     for r in rows:
-        ra, rb = find(r[id_col]), find(r[rep_col])
+        ra, rb = find(r["image_id"]), find(r["rep"])
         if ra != rb:
             parent[ra] = rb
     comp_min: dict = {}
@@ -286,49 +245,58 @@ def _labels_driver_side(spark, rows, id_col: str = "image_id",
     df = spark.createDataFrame(
         pd.DataFrame(out, columns=cols), out_schema) if out else \
         spark.createDataFrame(out, out_schema)
-    # the driver-side rows ride along so callers that themselves run on
-    # the driver (incremental cc_write's touched-partition bookkeeping)
-    # need no Spark job to read them back
-    df._apollo_local_rows = out
-    return df
+    return df, out
 
 
 def components_from_edges(edges: DataFrame, max_iter: int,
-                          id_col: str = "image_id", rep_col: str = "rep",
                           out_schema: str = "image_id string, cc_id string"
-                          ) -> DataFrame:
-    """Size-adaptive CC over a MATERIALIZED (id, rep) edge list: one
-    bounded limit-collect probes the edge count AND fetches the edges; at
-    or under CC_DRIVER_EDGES_MAX the driver union-find produces the
-    identical labeling in ~zero jobs, above it the truncated probe is
-    discarded and the distributed label fixpoint runs (round-7: the same
-    dispatch the incremental path used since round 6, now shared by EVERY
-    CC entry point — at bench scale the fixpoint's per-round driver
-    barrier, not data, dominated dedup_cc and the e2e cc stage, the same
-    regime logic as the cosine exact-vs-ANN crossover dispatcher).
-    ``edges`` must already be localCheckpoint/parquet-materialized."""
+                          ) -> tuple[DataFrame, list[tuple] | None]:
+    """Size-adaptive CC over a MATERIALIZED (image_id, rep) edge list ->
+    (labels, driver_rows): one bounded limit-collect probes the edge count
+    AND fetches the edges; at or under CC_DRIVER_EDGES_MAX the driver
+    union-find produces the identical labeling in ~zero jobs, above it the
+    truncated probe is discarded and the distributed label fixpoint runs
+    (the one CC dispatcher, shared by EVERY CC entry point — at bench
+    scale the fixpoint's per-round driver barrier, not data, dominated
+    dedup_cc and the e2e cc stage, the same regime logic as the cosine
+    exact-vs-ANN crossover dispatcher). ``driver_rows`` holds the labeling
+    as (id, cc_id) tuples when the union-find ran — bounded by the cap, so
+    a driver-side caller may use them without a Spark job — and None when
+    the fixpoint ran. ``edges`` must already be
+    localCheckpoint/parquet-materialized."""
     cap = CC_DRIVER_EDGES_MAX
     rows = edges.limit(cap + 1).collect() if cap > 0 else None
     if rows is not None and len(rows) <= cap:
-        return _labels_driver_side(edges.sparkSession, rows,
-                                   id_col, rep_col, out_schema)
-    fx = edges
-    if id_col != "image_id" or rep_col != "rep":
-        fx = edges.select(F.col(id_col).alias("image_id"),
-                          F.col(rep_col).alias("rep"))
-    labels = label_fixpoint(fx, max_iter)
+        return _labels_driver_side(edges.sparkSession, rows, out_schema)
+    labels = label_fixpoint(edges, max_iter)
     out_cols = [f.split()[0] for f in out_schema.split(",")]
-    return labels.toDF(*out_cols)
+    return labels.toDF(*out_cols), None
 
 
 def incremental_components_parts(old_cc: DataFrame, new_edges: DataFrame,
                                  new_ids: DataFrame, cfg: PipelineConfig
                                  ) -> tuple[DataFrame, DataFrame, DataFrame,
-                                            bool]:
-    """The warm-start core, returning the pieces separately so the caller
-    can choose the write strategy per piece:
+                                            list[tuple] | None]:
+    """Warm-start CC for an incremental append: merge ``new_edges`` (star
+    edges from delta-touched buckets + delta pair edges) into a CORRECT
+    previous fixpoint ``old_cc`` without re-running CC over the corpus.
 
-      (affected old cc_ids, relabeled rows, singleton rows, small)
+    The device: a converged labeling IS a spanning star of each old
+    component (every member points at its cc_id, itself a member), so the
+    union graph (old graph + new edges) is connectivity-equivalent to
+    (old-label star edges + new edges). Restricting further to AFFECTED
+    components — those containing an endpoint of a new edge — leaves the
+    untouched corpus out of the CC entirely; the merged edge set is
+    O(|new_edges| + |affected components|) and goes through the one
+    size-gated dispatcher (components_from_edges), so a typical append
+    resolves by driver union-find. Exactness: the merged min-label is the
+    global min image_id of the merged component, which is also what a full
+    rebuild emits (append==rebuild parity tests).
+
+    Returns the pieces separately so the caller can choose the write
+    strategy per piece:
+
+      (affected old cc_ids, relabeled rows, singleton rows, driver_rows)
 
     ``relabeled`` = members of affected components with their merged
     labels — SMALL (only components the delta actually collides with) and
@@ -338,14 +306,14 @@ def incremental_components_parts(old_cc: DataFrame, new_edges: DataFrame,
     APPEND as new files without touching any existing partition (they
     hash-scatter by own id; overwriting their partitions would rewrite the
     whole table and defeat the point). Everything else is byte-identical
-    to old_cc. incremental_components() composes the full table for flat
-    layouts.
+    to old_cc: the full table is ``old_cc`` minus the affected components,
+    plus ``relabeled`` and ``singles``.
 
-    ``small`` = True iff the driver short-circuit engaged: ``relabeled``
-    is then a LOCAL relation and |affected| / |relabeled| are bounded by
-    CC_DRIVER_EDGES_MAX, so the caller may collect them for driver-side
-    bookkeeping (touched-partition sets, anti-join literals) without an
-    unbounded-collect hazard on a mega-append."""
+    ``driver_rows`` = the relabeled rows as local (image_id, cc_id)
+    tuples when the union-find ran, else None: |affected| / |relabeled|
+    are then bounded by CC_DRIVER_EDGES_MAX, so the caller may collect
+    them for driver-side bookkeeping (touched-partition sets, anti-join
+    literals) without an unbounded-collect hazard on a mega-append."""
     new_edges = new_edges.localCheckpoint()
     endpoints = (new_edges.select("image_id")
                  .unionByName(new_edges.select(F.col("rep")
@@ -358,39 +326,20 @@ def incremental_components_parts(old_cc: DataFrame, new_edges: DataFrame,
                 .select("image_id", F.col("cc_id").alias("rep")))
     # materialize the merged edge list ONCE — the fixpoint joins it every
     # round and incremental consumers must not re-derive it from the old
-    # cc table. LAZY checkpoint (round 7): the size-probe collect below
-    # is the materializing action, so the eager-checkpoint job + collect
-    # job pair collapses into one; ``new_edges`` above stays EAGER
+    # cc table. LAZY checkpoint (round 7): the dispatcher's size-probe
+    # collect is the materializing action, so the eager-checkpoint job +
+    # collect job pair collapses into one; ``new_edges`` above stays EAGER
     # because it appears twice in this very plan (endpoints + union) and
     # a lazy form would compute its lineage twice inside the one job
     edges = (new_edges.unionByName(star_old).distinct()
              .localCheckpoint(eager=False))
-    # Small-graph short-circuit (round-6, streaming-cadence headroom): the
-    # merged edge set is O(|delta edges| + |affected components|) — NOT
-    # O(corpus) — so a typical micro-batch append carries a few hundred
-    # edges, and the distributed fixpoint's per-round driver barrier
-    # (~1-1.5 s/round x >= 2 rounds, measured) dominates the whole append.
-    # ONE bounded limit-collect over the checkpointed edges both probes
-    # the size and fetches the edge list (previously count + collect = two
-    # jobs): at or under the threshold (<= a few MB of string pairs), a
-    # driver-side union-find produces the IDENTICAL labeling (min image_id
-    # per merged component). A mega-append over the threshold discards the
-    # truncated probe and runs the distributed fixpoint. The FULL build
-    # path (connected_components) never short-circuits: its graph is
-    # corpus-sized by construction and its 1->4 scaling is a graded
-    # measurement of the distributed fixpoint.
-    cap = CC_DRIVER_EDGES_MAX
-    rows = edges.limit(cap + 1).collect() if cap > 0 else None
-    small = rows is not None and len(rows) <= cap
-    if small:
-        labels = _labels_driver_side(edges.sparkSession, rows)
-    else:
-        labels = label_fixpoint(edges, cfg.max_cc_iterations)
+    labels, driver_rows = components_from_edges(edges,
+                                                cfg.max_cc_iterations)
     singles = (new_ids.select("image_id")
                .join(labels.select("image_id"), "image_id", "left_anti")
                .join(old_cc.select("image_id"), "image_id", "left_anti")
                .withColumn("cc_id", F.col("image_id")))
-    return affected, labels, singles, small
+    return affected, labels, singles, driver_rows
 
 
 def connected_components(bands: DataFrame, cfg: PipelineConfig,
@@ -420,7 +369,7 @@ def connected_components(bands: DataFrame, cfg: PipelineConfig,
     pair), and partitions it leaves uncomputed on an over-cap graph are
     computed and persisted by fixpoint round 1."""
     edges = star_edges(bands).localCheckpoint(eager=False)
-    cc = components_from_edges(edges, cfg.max_cc_iterations)
+    cc, _ = components_from_edges(edges, cfg.max_cc_iterations)
     if all_ids is not None:
         singletons = (all_ids.select("image_id")
                       .join(cc.select("image_id"), "image_id", "left_anti")

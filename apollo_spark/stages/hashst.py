@@ -118,10 +118,8 @@ def signatures_mapside(features: DataFrame, vocab_hashes: np.ndarray,
     (collect_list) — measured 22.2 s of the 66.6 s stage at 4 cores on
     the 480k corpus — plus the bags re-read and the list-of-arrays Arrow
     conversion. At 10^12 rows the most expensive stage becomes a pure
-    map with no shuffle and no skew surface. pipeline.py falls back to
-    ``signatures`` (grouping shuffle) when resuming from a bags
-    checkpoint (parquet read-back may split a doc at a row-group
-    boundary) or when the vocabulary exceeds cfg.mapside_vocab_max.
+    map with no shuffle and no skew surface. ``signatures_auto`` picks
+    between this and ``signatures``.
     """
     from apollo_spark.functions.extractors import log_tf_log_idf
 
@@ -172,6 +170,26 @@ def signatures_mapside(features: DataFrame, vocab_hashes: np.ndarray,
 
     return (features.select("image_id", "feat_hash", "tf", "ns")
             .mapInPandas(kernel, schema=SIGNATURES_SCHEMA))
+
+
+def signatures_auto(features: DataFrame | None, vocab: DataFrame,
+                    ndocs: int, bags: DataFrame,
+                    cfg: PipelineConfig) -> DataFrame:
+    """The one choice between the two signature paths: the shuffle-free
+    ``signatures_mapside`` over the extraction rows ``features`` when they
+    are given and the vocabulary fits cfg.mapside_vocab_max (which bounds
+    the broadcast (hash, df) array pair), else the grouping-shuffle
+    ``signatures`` over the weighted ``bags``. Pass ``features=None`` when
+    the extraction rows are not known to be doc-contiguous — e.g. when the
+    bags come from a checkpoint read-back, whose row-group splits can cut
+    a doc. ``bags`` may be a lazy lineage: only the fallback reads it."""
+    if features is None or vocab.count() > cfg.mapside_vocab_max:
+        return signatures(bags, cfg)
+    vp = vocab.select("feat_hash", "df").toPandas()
+    vh = vp["feat_hash"].to_numpy().astype(np.int64).view(np.uint64)
+    vdf = vp["df"].to_numpy().astype(np.float64)
+    order = np.argsort(vh)
+    return signatures_mapside(features, vh[order], vdf[order], ndocs, cfg)
 
 
 def bands(signatures_df: DataFrame, cfg: PipelineConfig) -> DataFrame:

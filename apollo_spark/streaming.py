@@ -64,12 +64,7 @@ def apply_batch(spark: SparkSession, batch_df: DataFrame,
         return "skip_empty"
     cat = CheckpointCatalog(spark, out_dir, cfg, backend=backend)
     from apollo_spark.pipeline import run_pipeline
-    delta_id, content_fp, legacy = delta_fingerprint(batch)
-    # a batch first seen by a pre-upgrade run lives in the manifest under
-    # the old fingerprint formula — resolve to THAT entry so a crash
-    # replay spanning the upgrade still skips/refuses instead of
-    # double-appending (ADVICE r4 medium)
-    delta_id = cat.resolve_delta_id(delta_id, legacy)
+    delta_id, content_fp = delta_fingerprint(batch)
     if cat.delta_state(delta_id) == "committed":
         stored = cat.delta_content(delta_id)
         if stored is not None and stored != content_fp:

@@ -110,13 +110,14 @@ def main() -> int:
     # clusters — time the two halves separately (kernel span ends at an
     # eager localCheckpoint of the bands, graph span consumes it) so a
     # round-over-round swing in the combined number can be attributed
-    # without a manual A/B. Reported OUTSIDE the headline total.
+    # without a manual A/B. The kernel half runs the same signature path
+    # as wmh_clusters (_flagship_bands). Reported OUTSIDE the headline
+    # total.
     import __spark_entry__ as _e
-    from apollo_spark.stages import bags as _bs, cc as _ccs, hashst as _hs
+    from apollo_spark.stages import cc as _ccs
     _imgs = _e._docs_as_images(_e._docs(spark, SF_DIR))
     t0 = time.time()
-    _bands = _hs.run(_bs.run(_imgs, _e._FLAGSHIP_CFG),
-                     _e._FLAGSHIP_CFG)[1].localCheckpoint()
+    _bands = _e._flagship_bands(_imgs, _e._FLAGSHIP_CFG).localCheckpoint()
     wmh_kernel_sec = round(time.time() - t0, 3)
     t0 = time.time()
     _force(_ccs.clusters(_ccs.connected_components(

@@ -782,11 +782,22 @@ class TestConfigChangeInvalidation:
 
 
 class TestIncrementalCC:
+    @staticmethod
+    def _warm_start(old_cc, new_edges, new_ids, cfg):
+        """The full cc table from incremental_components_parts' pieces:
+        old_cc minus the affected components, plus the relabeled rows and
+        the new singletons."""
+        affected, relabeled, singles, _ = \
+            cc_st.incremental_components_parts(old_cc, new_edges, new_ids,
+                                               cfg)
+        return (old_cc.join(affected, "cc_id", "left_anti")
+                .unionByName(relabeled).unionByName(singles))
+
     def test_warm_start_merge_semantics(self, spark, cfg):
-        """incremental_components: old components merge through new edges
-        (label = global min of the merged set, as a full rebuild emits),
-        unaffected components and singletons pass through untouched, and
-        unmatched delta ids become singletons."""
+        """incremental_components_parts: old components merge through new
+        edges (label = global min of the merged set, as a full rebuild
+        emits), unaffected components and singletons pass through
+        untouched, and unmatched delta ids become singletons."""
         old = [("a1", "a1"), ("a2", "a1"), ("a3", "a1"),
                ("b1", "b1"), ("b2", "b1"), ("c1", "c1"), ("d1", "d1")]
         old_cc = spark.createDataFrame(old, "image_id string, cc_id string")
@@ -794,7 +805,7 @@ class TestIncrementalCC:
             [("a3", "b2"), ("n1", "c1")], "image_id string, rep string")
         new_ids = spark.createDataFrame([("n1",), ("n2",)],
                                         "image_id string")
-        out = cc_st.incremental_components(old_cc, new_edges, new_ids, cfg)
+        out = self._warm_start(old_cc, new_edges, new_ids, cfg)
         cc = {r["image_id"]: r["cc_id"] for r in out.collect()}
         assert cc == {"a1": "a1", "a2": "a1", "a3": "a1",
                       "b1": "a1", "b2": "a1",
@@ -811,13 +822,35 @@ class TestIncrementalCC:
         no_edges = spark.createDataFrame([], "image_id string, rep string")
         new_ids = spark.createDataFrame([("n1",), ("n2",)],
                                         "image_id string")
-        out = cc_st.incremental_components(old_cc, no_edges, new_ids, cfg)
+        out = self._warm_start(old_cc, no_edges, new_ids, cfg)
         cc = {r["image_id"]: r["cc_id"] for r in out.collect()}
         assert cc == {"a1": "a1", "a2": "a1", "z9": "z9",
                       "n1": "n1", "n2": "n2"}
 
+    # Both sides of the CC dispatcher's size gate, monkeypatched as in
+    # test_ops.py::test_cc_dispatch_parity: at the default cap the append
+    # resolves CC by driver union-find and computes its touched partitions
+    # driver-side; at cap 0 it runs the distributed fixpoint and the
+    # distributed touched-partition branch of the cc write. Each append
+    # test runs at both caps under its own name.
     def test_partitioned_append_touches_only_affected_partitions(
-            self, spark, cfg, tmp_path):
+            self, spark, cfg, tmp_path, monkeypatch):
+        self._partitioned_append(spark, cfg, tmp_path, monkeypatch, 100_000)
+
+    def test_partitioned_append_touches_only_affected_partitions_fixpoint(
+            self, spark, cfg, tmp_path, monkeypatch):
+        self._partitioned_append(spark, cfg, tmp_path, monkeypatch, 0)
+
+    def test_merge_two_components_and_clear_emptied_partition(
+            self, spark, cfg, tmp_path, monkeypatch):
+        self._merge_two_components(spark, cfg, tmp_path, monkeypatch,
+                                   100_000)
+
+    def test_merge_two_components_and_clear_emptied_partition_fixpoint(
+            self, spark, cfg, tmp_path, monkeypatch):
+        self._merge_two_components(spark, cfg, tmp_path, monkeypatch, 0)
+
+    def _partitioned_append(self, spark, cfg, tmp_path, monkeypatch, cap):
         """The cc checkpoint is hash-partitioned on cc_id; an incremental
         append must dynamic-overwrite ONLY the partitions holding changed
         rows — every other partition's files stay byte-identical on disk
@@ -829,6 +862,7 @@ class TestIncrementalCC:
         from apollo_spark.incremental import append_images
         from apollo_spark.pipeline import run_pipeline
         from pyspark.sql import functions as SF
+        monkeypatch.setattr(cc_st, "CC_DRIVER_EDGES_MAX", cap)
         small_cfg = cfg.with_(cc_table_partitions=8)
         base_pdf = synth.gen_corpus(150, seed=19)
         base = spark.createDataFrame(
@@ -891,8 +925,8 @@ class TestIncrementalCC:
         assert cl.exceptAll(expect).count() == 0
         assert expect.exceptAll(cl).count() == 0
 
-    def test_merge_two_components_and_clear_emptied_partition(
-            self, spark, cfg, tmp_path):
+    def _merge_two_components(self, spark, cfg, tmp_path, monkeypatch,
+                              cap):
         """The hardest warm-start case (round-3 VERDICT stretch) fused with
         the ADVICE r3 high fix: one delta doc whose caption CONTAINS both
         groups' captions bridges TWO previously separate components through
@@ -907,6 +941,7 @@ class TestIncrementalCC:
         from apollo_spark.checkpoint import CheckpointCatalog
         from apollo_spark.incremental import append_images
         from apollo_spark.pipeline import run_pipeline
+        monkeypatch.setattr(cc_st, "CC_DRIVER_EDGES_MAX", cap)
         small_cfg = cfg.with_(cc_table_partitions=8)
         parts = small_cfg.cc_table_partitions
 
@@ -1125,3 +1160,12 @@ class TestCatalogBatching:
         cat.append("st2", spark.range(0).selectExpr("id", "id % 3 as p"),
                    partition_by=["p"])
         assert cat.load("st2").count() == 0
+        # a partition overwrite onto the empty flat fallback takes the
+        # same root-file cleanup
+        cat.write("st3", empty, partition_by=["p"])
+        cat.overwrite_partitions("st3", delta, ["p"])
+        got = cat.load("st3")
+        assert sorted(r["id"] for r in got.collect()) == list(range(6))
+        assert {r["p"] for r in got.select("p").distinct().collect()} \
+            == {0, 1, 2}
+        assert not g.glob(os.path.join(cat.path("st3"), "*.parquet"))

@@ -274,87 +274,76 @@ class TestCrashWindows:
             apply_batch(spark, delta, cfg, out)
 
 
-class TestLegacyFingerprint:
-    """ADVICE r4 medium: the delta_id formula changed across rounds, so a
-    manifest entry written by a pre-upgrade run must still be found by a
-    post-upgrade replay (resolve_delta_id probes the legacy formulas)."""
+def _read_manifest(out: str) -> dict:
+    import json
+    with open(os.path.join(out, "manifest.json")) as f:
+        return json.load(f)
+
+
+def _write_manifest(out: str, m: dict) -> None:
+    import json
+    with open(os.path.join(out, "manifest.json"), "w") as f:
+        json.dump(m, f)
+
+
+class TestOldFormatRefusals:
+    """A checkpoint in a format no current run writes is refused loudly
+    before any write, instead of being migrated."""
 
     @staticmethod
-    def _legacy_v1_id(df) -> str:
-        """The superseded row-level formula, computed independently of the
-        helper under test: bit_xor(xxhash64(image_id)) over ROWS + count."""
-        from pyspark.sql import functions as F
-        r = df.agg(F.expr("bit_xor(xxhash64(image_id))").alias("s"),
-                   F.count(F.lit(1)).alias("n")).first()
-        return f"{int(r['s'] or 0) & 0xFFFFFFFFFFFFFFFF:x}-{r['n']}"
+    def _halves(spark, seed):
+        pdf = synth.gen_corpus(120, seed=seed)
+        return (spark.createDataFrame(
+                    pdf.iloc[:60].drop(columns=["gt_cluster"])),
+                spark.createDataFrame(
+                    pdf.iloc[60:].drop(columns=["gt_cluster"])))
 
-    def test_legacy_id_matches_v1_formula(self, spark):
-        """The helper's legacy_ids[0] must equal the real v1 formula —
-        including the even-multiplicity cancellation v1 exhibited."""
-        from apollo_spark.incremental import delta_fingerprint
-        pdf = synth.gen_corpus(40, seed=51)
-        df = spark.createDataFrame(pdf.drop(columns=["gt_cluster"]))
-        assert delta_fingerprint(df)[2][0] == self._legacy_v1_id(df)
-        dup = df.unionByName(df.limit(3))  # ids with multiplicity 2
-        assert delta_fingerprint(dup)[2][0] == self._legacy_v1_id(dup)
+    def test_cc_without_layout_refuses_append(self, spark, cfg, tmp_path):
+        """A cc stage entry without the partitioned-layout marker (a flat
+        cc table) makes append_images raise; the cc files and the
+        manifest stay as they were."""
+        half, delta = self._halves(spark, 52)
+        out = str(tmp_path / "run")
+        run_pipeline(spark, half, cfg, out)
+        m = _read_manifest(out)
+        del m["stages"]["cc"]["cc_layout"]
+        _write_manifest(out, m)
 
-    def _rekey_delta(self, out: str, old_id: str, new_id: str) -> None:
-        import json
-        path = os.path.join(out, "manifest.json")
-        with open(path) as f:
-            m = json.load(f)
-        entry = m["deltas"].pop(old_id)
-        entry.pop("fp_version", None)  # pre-upgrade entries carry none
-        m["deltas"][new_id] = entry
-        with open(path, "w") as f:
-            json.dump(m, f)
+        def cc_files():
+            return {f: os.path.getmtime(f) for f in glob.glob(
+                os.path.join(out, "cc", "**", "*.parquet"), recursive=True)}
 
-    def test_replay_of_pre_upgrade_committed_delta_skips(
+        files = cc_files()
+        with pytest.raises(ValueError, match="partitioned layout"):
+            append_images(spark, half.unionByName(delta), delta, cfg, out)
+        assert cc_files() == files
+        assert _read_manifest(out) == m
+
+    def test_delta_without_fp_version_refuses_append_and_batch(
             self, spark, cfg, tmp_path):
-        """A batch committed under the v1 formula and crash-replayed after
-        the upgrade must be recognized as committed (skip_replay, no
-        double rows), not dispatched to the append path."""
-        from apollo_spark.incremental import delta_fingerprint
-        pdf = synth.gen_corpus(120, seed=52)
-        half = spark.createDataFrame(
-            pdf.iloc[:60].drop(columns=["gt_cluster"]))
-        delta = spark.createDataFrame(
-            pdf.iloc[60:].drop(columns=["gt_cluster"]))
+        """A manifest delta entry without fp_version (recorded under an
+        older delta-id formula, so its batch cannot be recognized) makes
+        both append_images and apply_batch raise before writing."""
+        half, delta = self._halves(spark, 53)
         out = str(tmp_path / "run")
         assert apply_batch(spark, half, cfg, out) == "bootstrap"
-        assert apply_batch(spark, delta, cfg, out) == "append"
-        # simulate the pre-upgrade manifest: the committed entry lives
-        # under the legacy id, the current-formula id is unknown
-        cur_id = delta_fingerprint(delta)[0]
-        self._rekey_delta(out, cur_id, self._legacy_v1_id(delta))
-        cat = CheckpointCatalog(spark, out, cfg)
-        bags_rows = cat.load("bags").count()
-        with pytest.warns(RuntimeWarning, match="crash-replayed"):
-            assert apply_batch(spark, delta, cfg, out) == "skip_replay"
-        assert cat.load("bags").count() == bags_rows
-
-    def test_pre_upgrade_pending_append_still_refuses(
-            self, spark, cfg, tmp_path):
-        """A PENDING v1 append entry (crash mid-append before the upgrade)
-        must keep its loud refusal when retried post-upgrade."""
-        import json
-        pdf = synth.gen_corpus(120, seed=53)
-        half = spark.createDataFrame(
-            pdf.iloc[:60].drop(columns=["gt_cluster"]))
-        delta = spark.createDataFrame(
-            pdf.iloc[60:].drop(columns=["gt_cluster"]))
-        out = str(tmp_path / "run")
-        assert apply_batch(spark, half, cfg, out) == "bootstrap"
-        path = os.path.join(out, "manifest.json")
-        with open(path) as f:
-            m = json.load(f)
-        m.setdefault("deltas", {})[self._legacy_v1_id(delta)] = {
-            "state": "pending", "content": None, "kind": "append"}
-        with open(path, "w") as f:
-            json.dump(m, f)
-        full = half.unionByName(delta)
-        with pytest.raises(ValueError, match="pending"):
-            append_images(spark, full, delta, cfg, out)
+        m = _read_manifest(out)
+        for entry in m["deltas"].values():
+            del entry["fp_version"]
+        _write_manifest(out, m)
+        bags_rows = CheckpointCatalog(spark, out, cfg).load("bags").count()
+        with pytest.raises(ValueError, match="older delta format"):
+            append_images(spark, half.unionByName(delta), delta, cfg, out)
+        with pytest.raises(ValueError, match="older delta format"):
+            apply_batch(spark, delta, cfg, out)
+        assert _read_manifest(out) == m
+        assert CheckpointCatalog(spark, out, cfg).load("bags").count() \
+            == bags_rows
+        # a plain-string entry (the shape before entries were dicts) too
+        m["deltas"] = {"0-1": "committed"}
+        _write_manifest(out, m)
+        with pytest.raises(ValueError, match="older delta format"):
+            CheckpointCatalog(spark, out, cfg).delta_state("0-1")
 
 
 class TestStreamingCadence:

@@ -268,7 +268,7 @@ def main() -> int:
     # join are exchange-FREE: sym is pre-partitioned on src and labels on
     # image_id, both preserved through localCheckpoint (the legacy loop
     # re-shuffled 2x|edges| + |labels| rows every round — measured -29%
-    # fixpoint wall at local[4] on the 480k corpus, tools/fixpoint_ab.py).
+    # fixpoint wall at local[4] on the 480k corpus).
     # Broadcast off for THIS plan only: at audit scale the 2000-row sym
     # would broadcast and hide the co-partitioning property that carries
     # the 480k-corpus win (at real scale sym is way past any broadcast
@@ -309,16 +309,14 @@ def main() -> int:
     # 14. mapside signatures (round 6): the fresh-build signatures plan is
     # a single narrow chain — no exchange, no join (vocab prune + TF-IDF
     # weighting live inside the kernel against a broadcast array pair,
-    # immune to CacheManager plan substitution; hashst.signatures_mapside)
-    import numpy as np
+    # immune to CacheManager plan substitution; hashst.signatures_mapside,
+    # picked by hashst.signatures_auto for this small vocabulary)
     feats_ms = bags_stage.extract_features(images, cfg)
-    vp = bags_stage.vocab_table(feats_ms, cfg) \
-        .select("feat_hash", "df").toPandas()
-    vh = vp["feat_hash"].to_numpy().astype(np.int64).view(np.uint64)
-    vdf = vp["df"].to_numpy().astype(np.float64)
-    vo = np.argsort(vh)
-    ms = hashst.signatures_mapside(feats_ms, vh[vo], vdf[vo],
-                                   images.count(), cfg)
+    vocab_ms = bags_stage.vocab_table(feats_ms, cfg)
+    ndocs_ms = images.count()
+    ms = hashst.signatures_auto(
+        feats_ms, vocab_ms, ndocs_ms,
+        bags_stage.weight_bags(feats_ms, vocab_ms, ndocs_ms, cfg), cfg)
     p = plan_of(ms)
     sections.append((
         "mapside signatures (fresh build: no keyed shuffle, join-free)", p,
