@@ -303,18 +303,15 @@ def _stream_ingest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     second = imgs.where("cast(image_id as bigint) % 2 = 1")
     out = tempfile.mkdtemp(prefix="apollo-stream-entry-")
     # a 200-row demo on the session's production shuffle width is pure
-    # scheduler overhead — narrow it for the eager ingest, then restore;
-    # same for the cc/clusters partition count (64 hive dirs per write at
-    # 100-row scale is pure catalog overhead)
-    cfg = _FLAGSHIP_CFG.with_(cc_table_partitions=8)
+    # scheduler overhead — narrow it for the eager ingest, then restore
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        apply_batch(spark, first, cfg, out, extensions=False)
-        apply_batch(spark, second, cfg, out, extensions=False)
+        apply_batch(spark, first, _FLAGSHIP_CFG, out, extensions=False)
+        apply_batch(spark, second, _FLAGSHIP_CFG, out, extensions=False)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    cat = CheckpointCatalog(spark, out, cfg)
+    cat = CheckpointCatalog(spark, out, _FLAGSHIP_CFG)
     return (cat.load("clusters")
             .groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_members"))
             .groupBy("n_members").agg(F.count(F.lit(1)).alias("n_clusters")))

@@ -68,11 +68,6 @@ class PipelineConfig:
                                     # pairs (linear/bipartite mode instead) —
                                     # adaptive analogue of --edges (graph.py:209-249)
     max_cc_iterations: int = 20
-    cc_table_partitions: int = 64   # cc checkpoint hash-partitioned on
-                                    # pmod(xxhash64(cc_id), this): incremental
-                                    # appends dynamic-overwrite only the
-                                    # delta-touched partitions instead of
-                                    # rewriting the corpus-sized table
 
     def lsh_params(self) -> tuple[int, int]:
         """(htnum, band_size) — memoized via module-level cache in core.lsh."""

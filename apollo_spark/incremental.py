@@ -107,23 +107,34 @@ def append_images(spark: SparkSession, all_images: DataFrame | None,
 
     Refuses, before any write, a base run whose complete cc or clusters
     checkpoint lacks the hash-partitioned layout (cc_layout ==
-    stages.cc.CC_LAYOUT): the partitioned writes below would mix hive
-    directories into that flat table and break its next load. Such a run
-    must be rebuilt (reset + run_pipeline).
+    stages.cc.CC_LAYOUT with a recorded cc_parts count), or whose two
+    entries record different counts: the partitioned writes below would
+    mix hive directories into that table, or hash one component into two
+    partition numbers, and break its next load. Such a run must be
+    rebuilt (reset + run_pipeline).
     """
     if all_images is None and not append_images_stage:
         raise ValueError("all_images=None requires append_images_stage")
     cat = CheckpointCatalog(spark, out_dir, cfg, backend=backend)
     if not cat.is_complete("vocab") or not cat.is_complete("bands"):
         raise ValueError(f"no completed base run at {out_dir}")
+    parts = {}
     for st in ("cc", "clusters"):
-        if cat.is_complete(st) \
-                and cat.stage_info(st).get("cc_layout") \
-                != cc_stage.CC_LAYOUT:
+        if not cat.is_complete(st):
+            continue
+        info = cat.stage_info(st)
+        if info.get("cc_layout") != cc_stage.CC_LAYOUT \
+                or "cc_parts" not in info:
             raise ValueError(
                 f"{st} checkpoint at {out_dir} lacks the partitioned "
                 f"layout {cc_stage.CC_LAYOUT!r} — rebuild the run (reset + "
                 f"run_pipeline) before appending")
+        parts[st] = info["cc_parts"]
+    if len(set(parts.values())) > 1:
+        raise ValueError(
+            f"cc and clusters checkpoints at {out_dir} record different "
+            f"partition counts {parts} — rebuild the run (reset + "
+            f"run_pipeline) before appending")
     with cat.batched_catalog():
         return _append_images_batched(
             spark, cat, all_images, new_images, cfg, out_dir,
@@ -255,9 +266,12 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
         #     keeps every distributed piece distributed and only merges
         #     the blocking materialization points).
         spark_s = new_images.sparkSession
-        parts_n = cfg.cc_table_partitions
-        relabeled = cc_stage.with_cc_partition(relabeled, cfg)
-        singles = cc_stage.with_cc_partition(singles, cfg)
+        # the modulus the tables were laid out with, never re-derived from
+        # the grown corpus: the trailing run_pipeline relayouts both tables
+        # once the corpus needs twice this count
+        parts_n = cat.stage_info("cc")["cc_parts"]
+        relabeled = cc_stage.with_cc_partition(relabeled, parts_n)
+        singles = cc_stage.with_cc_partition(singles, parts_n)
         if rel_local is not None:
             import pandas as pd
 
@@ -293,11 +307,11 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
             relabeled = relabeled.localCheckpoint()
             touched = {r["p"] for r in relabeled.select("p")
                        .unionByName(cc_stage.with_cc_partition(
-                           affected, cfg).select("p"))
+                           affected, parts_n).select("p"))
                        .distinct().collect()}
             new_cl = cc_stage.with_clusters_partition(
                 cc_stage.clusters(relabeled.select("image_id", "cc_id")),
-                cfg)
+                parts_n)
         # an incomplete clusters stage is left to the trailing run_pipeline,
         # which derives it from the updated cc table
         cl_incremental = touched and cat.is_complete("clusters")
@@ -328,12 +342,12 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
         cc_cols = ["image_id", "cc_id", "p"]
         cl_cols = ["cluster_id", "rep", "image_id", "p"]
 
-        # each written frame is repartitioned BY p with a pinned partition
-        # count before its write (same device and rationale as
+        # each written frame is repartitioned BY p into the table's
+        # recorded count before its write (same device and rationale as
         # run_pipeline's cc stage): one file per touched hive dir instead
         # of (tasks x dirs) small files — the combined checkpoint carries
-        # ~100+ partitions and the fan-out showed up both in the write and
-        # in every later scan of the table
+        # ~100+ partitions and the fan-out would show up both in the write
+        # and in every later scan of the table
         def _write_cc_overwrite():
             # dynamic overwrite replaces only partitions PRESENT in the
             # written df — a touched partition whose every row relabeled

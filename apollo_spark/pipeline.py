@@ -72,6 +72,23 @@ def _run_stages(spark: SparkSession, images: DataFrame,
     images = bags_stage.filter_formats(images, cfg.formats)  # P5
     ndocs = images.count()
 
+    # cc/clusters hive layout: cc_parts partitions, sized from the corpus
+    # when cc is built (stages.cc.cc_partitions) and recorded in both
+    # manifest entries. Appends keep the recorded count while the corpus
+    # grows; once it needs twice that, cc and the tables derived for it
+    # are dropped here and rebuilt below at the new count — one relayout
+    # per doubling, so the cost per appended row stays constant. A cc
+    # entry without a count (or no cc at all) rebuilds the same way.
+    cc_parts = cc_stage.cc_partitions(ndocs)
+    if cat.is_complete("cc"):
+        recorded = cat.stage_info("cc").get("cc_parts", 0)
+        if cc_parts >= 2 * recorded:
+            cat.reset(["cc", "clusters", "substring_membership"])
+        else:
+            cc_parts = recorded
+    elif cat.is_complete("clusters"):
+        cat.reset(["clusters"])   # derived from cc: rebuilt with it
+
     # The extension passes (simhash_pairs over phash, substring
     # fingerprints + census over captions) depend only on ``images`` —
     # not on the vocab/bags/signature chain — so they run CONCURRENTLY
@@ -148,17 +165,17 @@ def _run_stages(spark: SparkSession, images: DataFrame,
                     .unionByName(out["substring_membership"]))
 
     cc_in = cc_input
-    # cc checkpoints hash-partitioned on the component id (CC_LAYOUT):
-    # incremental appends then dynamic-overwrite only delta-touched
-    # partitions instead of rewriting the corpus-sized table
-    # the .repartition(64, "p") before each partitioned write routes every
-    # partition VALUE wholly into one task — one file per hive dir instead
-    # of (tasks x 64) small files, and the write's injected
-    # sort-by-partition-col becomes a near-noop per task. The explicit
-    # numPartitions pins the exchange: a bare repartition("p") joins AQE
-    # partition coalescing, which would collapse this small table to 1-2
-    # tasks and serialize the 64-dir write
-    if not cat.is_complete("cc") and not cat.is_complete("clusters"):
+    # cc and clusters are hash-partitioned on the component id (CC_LAYOUT)
+    # so incremental appends dynamic-overwrite only delta-touched
+    # partitions instead of rewriting the corpus-sized tables. The
+    # .repartition(cc_parts, "p") before each write routes every partition
+    # VALUE wholly into one task — one file per hive dir, and the write's
+    # injected sort-by-partition-col becomes a near-noop per task. The
+    # explicit count pins the exchange: a bare repartition("p") joins AQE
+    # partition coalescing, which would collapse a small table to 1-2
+    # tasks and serialize a many-dir write
+    layout = {"cc_layout": cc_stage.CC_LAYOUT, "cc_parts": cc_parts}
+    if not cat.is_complete("cc"):
         # fresh build of BOTH tables: materialize the labeling once and
         # write the two tables from it CONCURRENTLY (they derive from the
         # same checkpointed parent and target disjoint directories; the
@@ -166,37 +183,31 @@ def _run_stages(spark: SparkSession, images: DataFrame,
         # round-trip — guide §2.6 again)
         t0 = time.time()
         cc_built = (cc_stage.with_cc_partition(
-            cc_stage.connected_components(cc_in, cfg, all_ids=images), cfg)
-            .repartition(cfg.cc_table_partitions, "p")
+            cc_stage.connected_components(cc_in, cfg, all_ids=images),
+            cc_parts)
+            .repartition(cc_parts, "p")
             .localCheckpoint())
         cl_built = (cc_stage.with_clusters_partition(
-            cc_stage.clusters(cc_built.select("image_id", "cc_id")), cfg)
-            .repartition(cfg.cc_table_partitions, "p"))
+            cc_stage.clusters(cc_built.select("image_id", "cc_id")),
+            cc_parts)
+            .repartition(cc_parts, "p"))
         build_sec = time.time() - t0
         from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fcc = pool.submit(
-                stage, "cc", lambda: cc_built, ["p"],
-                {"cc_layout": cc_stage.CC_LAYOUT})
-            fcl = pool.submit(
-                stage, "clusters", lambda: cl_built, ["p"],
-                {"cc_layout": cc_stage.CC_LAYOUT})
+            fcc = pool.submit(stage, "cc", lambda: cc_built, ["p"], layout)
+            fcl = pool.submit(stage, "clusters", lambda: cl_built, ["p"],
+                              layout)
             fcc.result()
             fcl.result()
         timings["cc"] += build_sec   # attribute the shared labeling build
     else:
-        stage("cc", lambda: cc_stage.with_cc_partition(
-            cc_stage.connected_components(cc_in, cfg, all_ids=images), cfg)
-            .repartition(cfg.cc_table_partitions, "p"),
-            partition_by=["p"], info={"cc_layout": cc_stage.CC_LAYOUT})
-        # clusters shares the cc table's hash-partitioned layout (keyed on
-        # the component rep with the same hash/modulus), so incremental
-        # appends dynamic-overwrite only delta-touched partitions of BOTH
-        # tables
+        out["cc"] = cat.load("cc")
+        # an incomplete clusters table over a complete cc is derived with
+        # cc's recorded partition count, so both tables keep one modulus
         stage("clusters", lambda: cc_stage.with_clusters_partition(
-            cc_stage.clusters(out["cc"]), cfg)
-            .repartition(cfg.cc_table_partitions, "p"),
-            partition_by=["p"], info={"cc_layout": cc_stage.CC_LAYOUT})
+            cc_stage.clusters(out["cc"]), cc_parts)
+            .repartition(cc_parts, "p"),
+            partition_by=["p"], info=layout)
     if refine:
         from apollo_spark.stages import refine as refine_stage
         stage("clusters_refined", lambda: refine_stage.refine_components(

@@ -378,21 +378,33 @@ def connected_components(bands: DataFrame, cfg: PipelineConfig,
     return cc
 
 
-CC_LAYOUT = "p-hash-v1"   # manifest marker for the partitioned cc layout
+# manifest marker for the partitioned cc/clusters layout: hive column
+# p = pmod(xxhash64(cc_id), cc_parts), with cc_parts recorded in both
+# manifest entries
+CC_LAYOUT = "p-hash-v2"
+# cc rows per hive partition (~30 MB at the ~31 B/row of a 480k-row table):
+# each hive dir costs a file plus listing and catalog work on every write
+# and load, so a table gets only as many dirs as its size needs
+CC_ROWS_PER_PARTITION = 1_000_000
 
 
-def with_cc_partition(cc: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def cc_partitions(ndocs: int) -> int:
+    """Hive partition count of the cc/clusters tables for a corpus of
+    ``ndocs`` rows: ceil(ndocs / CC_ROWS_PER_PARTITION), at least 1."""
+    return max(1, -(-ndocs // CC_ROWS_PER_PARTITION))
+
+
+def with_cc_partition(cc: DataFrame, parts: int) -> DataFrame:
     """Attach the cc checkpoint's partition column:
-    p = pmod(xxhash64(cc_id), cfg.cc_table_partitions). Hash-partitioning
-    on the COMPONENT id means an incremental append touches only the
-    partitions of the affected components' old and new labels — the
-    dynamic-overwrite append path (checkpoint.overwrite_partitions)."""
+    p = pmod(xxhash64(cc_id), parts). Hash-partitioning on the COMPONENT
+    id means an incremental append touches only the partitions of the
+    affected components' old and new labels — the dynamic-overwrite append
+    path (checkpoint.overwrite_partitions)."""
     return cc.withColumn(
-        "p", F.pmod(F.xxhash64("cc_id"),
-                    F.lit(cfg.cc_table_partitions)).cast("int"))
+        "p", F.pmod(F.xxhash64("cc_id"), F.lit(parts)).cast("int"))
 
 
-def with_clusters_partition(cl: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def with_clusters_partition(cl: DataFrame, parts: int) -> DataFrame:
     """Attach the clusters table's partition column. Keyed on the
     REPRESENTATIVE (rep == cc_id), with the same hash and modulus as the
     cc table (with_cc_partition) — so one component's cc rows and cluster
@@ -400,8 +412,7 @@ def with_clusters_partition(cl: DataFrame, cfg: PipelineConfig) -> DataFrame:
     touched-partition set (computed once from the affected/relabeled
     components) drives the dynamic overwrite of both tables."""
     return cl.withColumn(
-        "p", F.pmod(F.xxhash64("rep"),
-                    F.lit(cfg.cc_table_partitions)).cast("int"))
+        "p", F.pmod(F.xxhash64("rep"), F.lit(parts)).cast("int"))
 
 
 def component_sizes(cc: DataFrame) -> DataFrame:

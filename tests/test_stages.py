@@ -863,7 +863,9 @@ class TestIncrementalCC:
         from apollo_spark.pipeline import run_pipeline
         from pyspark.sql import functions as SF
         monkeypatch.setattr(cc_st, "CC_DRIVER_EDGES_MAX", cap)
-        small_cfg = cfg.with_(cc_table_partitions=8)
+        # 150 base rows -> 8 partitions; the 212-row corpus after the
+        # append stays under twice that, so the append keeps 8
+        monkeypatch.setattr(cc_st, "CC_ROWS_PER_PARTITION", 19)
         base_pdf = synth.gen_corpus(150, seed=19)
         base = spark.createDataFrame(
             base_pdf.drop(columns=["gt_cluster"]))
@@ -878,9 +880,10 @@ class TestIncrementalCC:
             "image_id", SF.concat(SF.lit("dup"), SF.col("image_id")))
         delta = fresh.unionByName(dups)
         out = str(tmp_path / "run")
-        run_pipeline(spark, base, small_cfg, out)
-        cat = CheckpointCatalog(spark, out, small_cfg)
-        assert cat.stage_info("cc")["cc_layout"] == "p-hash-v1"
+        run_pipeline(spark, base, cfg, out)
+        cat = CheckpointCatalog(spark, out, cfg)
+        assert cat.stage_info("cc")["cc_layout"] == "p-hash-v2"
+        assert cat.stage_info("cc")["cc_parts"] == 8
 
         def snapshot():
             return {f: os.path.getmtime(f) for f in glob.glob(
@@ -889,7 +892,7 @@ class TestIncrementalCC:
         before = snapshot()
         assert len({os.path.dirname(f) for f in before}) == 8
         res = append_images(spark, base.unionByName(delta), delta,
-                            small_cfg, out)
+                            cfg, out)
         after = snapshot()
         # pre-existing files may only disappear/change inside the
         # overwrite-touched partitions (the relabeled components' old/new
@@ -919,7 +922,9 @@ class TestIncrementalCC:
         # clusters took the same partitioned treatment (r3 VERDICT #4):
         # the incrementally-maintained table must equal a from-scratch
         # derivation over the final cc table, row for row
-        assert cat.stage_info("clusters")["cc_layout"] == "p-hash-v1"
+        assert cat.stage_info("clusters")["cc_layout"] == "p-hash-v2"
+        assert cat.stage_info("cc")["cc_parts"] \
+            == cat.stage_info("clusters")["cc_parts"] == 8
         cl = cat.load("clusters").select("cluster_id", "rep", "image_id")
         expect = cc_st.clusters(cc.select("image_id", "cc_id"))
         assert cl.exceptAll(expect).count() == 0
@@ -942,8 +947,10 @@ class TestIncrementalCC:
         from apollo_spark.incremental import append_images
         from apollo_spark.pipeline import run_pipeline
         monkeypatch.setattr(cc_st, "CC_DRIVER_EDGES_MAX", cap)
-        small_cfg = cfg.with_(cc_table_partitions=8)
-        parts = small_cfg.cc_table_partitions
+        # one row per partition: the 4-row base gets 4 partitions, and
+        # the 5-row corpus after the append keeps them
+        monkeypatch.setattr(cc_st, "CC_ROWS_PER_PARTITION", 1)
+        parts = 4
 
         def p_of(s):
             return spark.sql(
@@ -969,12 +976,13 @@ class TestIncrementalCC:
             [("m1", b"xe", 8, 8, "raw", cap_a + " " + cap_b, 33333)],
             synth.IMAGES_SCHEMA)
         out = str(tmp_path / "run")
-        run_pipeline(spark, base, small_cfg, out)
-        cat = CheckpointCatalog(spark, out, small_cfg)
+        run_pipeline(spark, base, cfg, out)
+        cat = CheckpointCatalog(spark, out, cfg)
+        assert cat.stage_info("cc")["cc_parts"] == parts
         pre = {r["image_id"]: r["cc_id"] for r in cat.load("cc").collect()}
         assert pre == {"a1": "a1", "a2": "a1", b1: b1, b1 + "x": b1}
-        append_images(spark, base.unionByName(delta), delta,
-                      small_cfg, out)
+        append_images(spark, base.unionByName(delta), delta, cfg, out)
+        assert cat.stage_info("cc")["cc_parts"] == parts
         cc = cat.load("cc")
         got = {r["image_id"]: r["cc_id"] for r in cc.collect()}
         assert got == {k: "a1" for k in
@@ -988,7 +996,7 @@ class TestIncrementalCC:
         assert cl.select("image_id").distinct().count() == 5
         assert cl.count() == 5
         # parity with a from-scratch rebuild over the full corpus
-        full = run_pipeline(spark, base.unionByName(delta), small_cfg,
+        full = run_pipeline(spark, base.unionByName(delta), cfg,
                             str(tmp_path / "full"))
         assert {(r["image_id"], r["cc_id"]) for r in full["cc"]
                 .select("image_id", "cc_id").collect()} == set(got.items())
@@ -1004,7 +1012,8 @@ class TestIncrementalCC:
         from apollo_spark.incremental import append_images
         from apollo_spark.pipeline import run_pipeline
         from pyspark.sql import functions as SF
-        small_cfg = cfg.with_(cc_table_partitions=8)
+        # 120 base rows -> 8 partitions
+        monkeypatch.setattr(cc_st, "CC_ROWS_PER_PARTITION", 15)
         base = spark.createDataFrame(
             synth.gen_corpus(120, seed=23).drop(columns=["gt_cluster"]))
         fresh = spark.createDataFrame(
@@ -1016,7 +1025,7 @@ class TestIncrementalCC:
         delta = fresh.unionByName(dups)
         full = base.unionByName(delta)
         out = str(tmp_path / "run")
-        run_pipeline(spark, base, small_cfg, out)
+        run_pipeline(spark, base, cfg, out)
 
         real_append = CheckpointCatalog.append
 
@@ -1028,18 +1037,107 @@ class TestIncrementalCC:
 
         monkeypatch.setattr(CheckpointCatalog, "append", crash_on_cc_append)
         with pytest.raises(RuntimeError, match="simulated crash"):
-            append_images(spark, full, delta, small_cfg, out)
-        monkeypatch.undo()
+            append_images(spark, full, delta, cfg, out)
+        monkeypatch.setattr(CheckpointCatalog, "append", real_append)
         # still pending -> duplicate invocation refused loudly
         with pytest.raises(ValueError, match="pending"):
-            append_images(spark, full, delta, small_cfg, out)
+            append_images(spark, full, delta, cfg, out)
         # recovery: reset and rebuild from the full corpus
-        cat = CheckpointCatalog(spark, out, small_cfg)
+        cat = CheckpointCatalog(spark, out, cfg)
         cat.reset()
-        run_pipeline(spark, full, small_cfg, out)
+        run_pipeline(spark, full, cfg, out)
         cc = cat.load("cc")
         assert cc.count() == 152
         assert cc.select("image_id").distinct().count() == 152
+
+    def test_cc_partitions_boundaries(self):
+        """The cc/clusters partition count is ceil(n / R), at least 1."""
+        R = cc_st.CC_ROWS_PER_PARTITION
+        assert [cc_st.cc_partitions(n)
+                for n in (0, 1, R, R + 1, 2 * R + 1)] == [1, 1, 1, 2, 3]
+
+    def test_append_keeps_partition_count_until_corpus_doubles(
+            self, spark, cfg, tmp_path, monkeypatch):
+        """Appends keep the recorded partition count while the corpus
+        needs fewer than twice it; the append that crosses 2k relayouts
+        cc and clusters at the new count — every id once, no hive dir of
+        the old modulus left, labels equal to a from-scratch build."""
+        import glob
+        import os
+        from apollo_spark import synth
+        from apollo_spark.checkpoint import CheckpointCatalog
+        from apollo_spark.incremental import append_images
+        from apollo_spark.pipeline import run_pipeline
+        # 100 base rows -> 4 partitions; 150 rows need 6 (< 8, kept);
+        # 210 rows need 9 (>= 8, relayout)
+        monkeypatch.setattr(cc_st, "CC_ROWS_PER_PARTITION", 25)
+        pdf = synth.gen_corpus(210, seed=29).drop(columns=["gt_cluster"])
+        base, d1, d2 = (spark.createDataFrame(pdf.iloc[a:b])
+                        for a, b in ((0, 100), (100, 150), (150, 210)))
+        out = str(tmp_path / "run")
+        run_pipeline(spark, base, cfg, out)
+        cat = CheckpointCatalog(spark, out, cfg)
+
+        def parts():
+            return (cat.stage_info("cc")["cc_parts"],
+                    cat.stage_info("clusters")["cc_parts"])
+
+        assert parts() == (4, 4)
+        append_images(spark, base.unionByName(d1), d1, cfg, out)
+        assert parts() == (4, 4)
+        full = base.unionByName(d1).unionByName(d2)
+        append_images(spark, full, d2, cfg, out)
+        assert parts() == (9, 9)
+        for st, key in (("cc", "cc_id"), ("clusters", "rep")):
+            t = cat.load(st)
+            assert t.count() == t.select("image_id").distinct().count()
+            # every row sits in the partition of its key at the new count
+            assert t.filter(F.col("p") != F.pmod(
+                F.xxhash64(key), F.lit(9))).count() == 0
+            dirs = {int(os.path.basename(d)[2:]) for d in
+                    glob.glob(os.path.join(out, st, "p=*"))}
+            assert dirs == {r["p"] for r in
+                            t.select("p").distinct().collect()}
+        assert cat.load("cc").count() == 210
+        scratch = run_pipeline(spark, full, cfg, str(tmp_path / "full"))
+        assert {(r["image_id"], r["cc_id"]) for r in
+                cat.load("cc").select("image_id", "cc_id").collect()} \
+            == {(r["image_id"], r["cc_id"]) for r in
+                scratch["cc"].select("image_id", "cc_id").collect()}
+
+    @pytest.mark.parametrize("failing", ["clusters", "cc"])
+    def test_concurrent_cc_clusters_write_failure_resumes(
+            self, spark, cfg, tmp_path, monkeypatch, failing):
+        """A failure in one of the two concurrent fresh cc/clusters writes
+        propagates out of run_pipeline; a resume yields the cc and
+        clusters rows of an uninterrupted build, with one partition count
+        recorded on both manifest entries."""
+        from apollo_spark import synth
+        from apollo_spark.checkpoint import CheckpointCatalog
+        from apollo_spark.pipeline import run_pipeline
+        monkeypatch.setattr(cc_st, "CC_ROWS_PER_PARTITION", 30)  # 4 parts
+        images = spark.createDataFrame(
+            synth.gen_corpus(120, seed=31).drop(columns=["gt_cluster"]))
+        real_write = CheckpointCatalog.write
+
+        def failing_write(self, stage, df, *a, **kw):
+            if stage == failing:
+                raise RuntimeError(f"simulated {stage} write failure")
+            return real_write(self, stage, df, *a, **kw)
+
+        out = str(tmp_path / "run")
+        monkeypatch.setattr(CheckpointCatalog, "write", failing_write)
+        with pytest.raises(RuntimeError, match="simulated"):
+            run_pipeline(spark, images, cfg, out)
+        monkeypatch.setattr(CheckpointCatalog, "write", real_write)
+        cat = CheckpointCatalog(spark, out, cfg)
+        assert not cat.is_complete(failing)
+        res = run_pipeline(spark, images, cfg, out)
+        ref = run_pipeline(spark, images, cfg, str(tmp_path / "ref"))
+        for st in ("cc", "clusters"):
+            assert cat.stage_info(st)["cc_parts"] == 4
+            assert res[st].exceptAll(ref[st]).count() == 0
+            assert ref[st].exceptAll(res[st]).count() == 0
 
     def test_delta_fingerprint_multiplicity(self, spark):
         """ADVICE r3: a row-level bit_xor cancels even-multiplicity rows —

@@ -298,26 +298,55 @@ class TestOldFormatRefusals:
                 spark.createDataFrame(
                     pdf.iloc[60:].drop(columns=["gt_cluster"])))
 
+    def _assert_append_refused(self, spark, cfg, tmp_path, seed, edit,
+                               match):
+        """Build a base run, apply ``edit`` to its manifest, and check
+        that append_images raises before touching the cc and clusters
+        files or the manifest."""
+        half, delta = self._halves(spark, seed)
+        out = str(tmp_path / "run")
+        run_pipeline(spark, half, cfg, out)
+        m = _read_manifest(out)
+        edit(m["stages"])
+        _write_manifest(out, m)
+
+        def table_files():
+            return {f: os.path.getmtime(f) for st in ("cc", "clusters")
+                    for f in glob.glob(os.path.join(out, st, "**",
+                                                    "*.parquet"),
+                                       recursive=True)}
+
+        files = table_files()
+        with pytest.raises(ValueError, match=match):
+            append_images(spark, half.unionByName(delta), delta, cfg, out)
+        assert table_files() == files
+        assert _read_manifest(out) == m
+
     def test_cc_without_layout_refuses_append(self, spark, cfg, tmp_path):
         """A cc stage entry without the partitioned-layout marker (a flat
         cc table) makes append_images raise; the cc files and the
         manifest stay as they were."""
-        half, delta = self._halves(spark, 52)
-        out = str(tmp_path / "run")
-        run_pipeline(spark, half, cfg, out)
-        m = _read_manifest(out)
-        del m["stages"]["cc"]["cc_layout"]
-        _write_manifest(out, m)
+        self._assert_append_refused(
+            spark, cfg, tmp_path, 52,
+            lambda st: st["cc"].pop("cc_layout"), "partitioned layout")
 
-        def cc_files():
-            return {f: os.path.getmtime(f) for f in glob.glob(
-                os.path.join(out, "cc", "**", "*.parquet"), recursive=True)}
+    def test_cc_without_partition_count_refuses_append(self, spark, cfg,
+                                                       tmp_path):
+        """A cc entry that does not record its partition count gives the
+        append no modulus to hash into: it raises before any write."""
+        self._assert_append_refused(
+            spark, cfg, tmp_path, 54,
+            lambda st: st["cc"].pop("cc_parts"), "partitioned layout")
 
-        files = cc_files()
-        with pytest.raises(ValueError, match="partitioned layout"):
-            append_images(spark, half.unionByName(delta), delta, cfg, out)
-        assert cc_files() == files
-        assert _read_manifest(out) == m
+    def test_cc_clusters_partition_count_mismatch_refuses_append(
+            self, spark, cfg, tmp_path):
+        """cc and clusters entries recording different partition counts
+        would hash one component into two partition numbers: the append
+        raises before any write."""
+        def mismatch(st):
+            st["clusters"]["cc_parts"] = st["cc"]["cc_parts"] + 1
+        self._assert_append_refused(spark, cfg, tmp_path, 55, mismatch,
+                                    "different partition counts")
 
     def test_delta_without_fp_version_refuses_append_and_batch(
             self, spark, cfg, tmp_path):

@@ -232,10 +232,12 @@ def main() -> int:
     cl_dir = "/tmp/apollo_plan_audit_clusters"
     cc_df = cc_mod.connected_components(
         hashst.bands(sigs, cfg).localCheckpoint(), cfg, all_ids=images)
-    cc_mod.with_clusters_partition(cc_mod.clusters(cc_df), cfg) \
+    # the partition count run_pipeline derives for this corpus
+    cc_parts = cc_mod.cc_partitions(images.count())
+    cc_mod.with_clusters_partition(cc_mod.clusters(cc_df), cc_parts) \
         .write.mode("overwrite").partitionBy("p").parquet(cl_dir)
     cl_pq = spark.read.parquet(cl_dir)
-    probe_cl = cl_pq.filter(F.col("p") == 5)
+    probe_cl = cl_pq.filter(F.col("p") == 0)
     p = plan_of(probe_cl)
     sections.append((
         "clusters probe on rep-hash-partitioned table (O(touched) IO)", p,
@@ -244,19 +246,23 @@ def main() -> int:
           if "PartitionFilters" in p else False)]))
 
     # 12. cc/clusters partitioned WRITE plan (round 5): run_pipeline
-    # repartitions on the hive column with an explicit numPartitions
-    # before writing, so each partition VALUE lands wholly in one task
-    # (one file per dir, near-noop write sort). The explicit count tags
-    # the exchange REPARTITION_BY_NUM, which AQE is forbidden to
-    # coalesce — a bare repartition("p") would collapse this small table
-    # to 1-2 tasks and serialize the 64-dir write.
-    wdf = cc_mod.with_cc_partition(cc_df, cfg) \
-        .repartition(cfg.cc_table_partitions, "p")
+    # repartitions on the hive column into the derived cc_parts before
+    # writing, so each partition VALUE lands wholly in one task (one file
+    # per dir, near-noop write sort). The explicit count tags the exchange
+    # REPARTITION_BY_NUM, which AQE is forbidden to coalesce — a bare
+    # repartition("p") would collapse a small table to 1-2 tasks and
+    # serialize a many-dir write. At one partition Spark plans the
+    # exchange as SinglePartition: the one dir is still one task's file.
+    wdf = cc_mod.with_cc_partition(cc_df, cc_parts) \
+        .repartition(cc_parts, "p")
     p = plan_of(wdf)
     sections.append((
-        "cc checkpoint write (pinned one-file-per-partition exchange)", p,
-        [("hash exchange on the hive partition column",
-          "hashpartitioning(p#" in p),
+        f"cc checkpoint write (pinned one-file-per-partition exchange, "
+        f"cc_parts={cc_parts})", p,
+        [("hash exchange on the hive partition column (one partition: "
+          "single-partition exchange)",
+          "hashpartitioning(p#" in p if cc_parts > 1
+          else "SinglePartition" in p),
          ("numPartitions pinned against AQE coalescing",
           "REPARTITION_BY_NUM" in p)]))
 
@@ -519,10 +525,11 @@ s×s grid — per-cell work ~(block/s)² — and the probe's worst salted join
 fell to 3.45× (bar ~4; SKEW_PROBE.json).
 
 **3. Partitioned checkpoint writes pin their exchange.** Section 12:
-run_pipeline repartitions cc/clusters on the hive column with an explicit
-numPartitions before the write — one file per partition dir instead of
-(tasks × 64) small files, tagged REPARTITION_BY_NUM so AQE cannot
-coalesce the small table to 1-2 tasks and serialize the 64-dir write.
+run_pipeline repartitions cc/clusters on the hive column into the
+partition count it derives from the corpus (`stages.cc.cc_partitions`,
+one per million rows) before the write — one file per partition dir
+instead of (tasks × dirs) small files, tagged REPARTITION_BY_NUM so AQE
+cannot coalesce the exchange and serialize a many-dir write.
 
 **4. One catalog flush per build/append.** Not a Catalyst property but a
 job-count one: a fresh run_pipeline build batches its ~9 per-stage
