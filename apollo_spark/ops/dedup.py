@@ -4,9 +4,11 @@ The full web-corpus dedup ladder, each rung a standalone operator:
 
   exact         md5 content hash, groupBy            (1 shuffle)
   minhash+LSH   word shingles -> K portable minhashes -> banded buckets
-                -> candidate pairs -> exact-Jaccard verify
-  simhash       bitwise majority sketch + pigeonhole block join
-  n-gram        exact Jaccard over shared-shingle candidates
+                -> candidate pairs -> exact-Jaccard verify (one shingle
+                join, then two aggregates over one exchange)
+  simhash       bitwise majority sketch (per-row vote arrays summed by one
+                groupBy) + pigeonhole block join
+  n-gram        exact Jaccard over shared-shingle candidates (same verify)
   cosine        embedding near-dup (ops.similarity)
 
 Same shape as the apollo pipeline (bags -> signatures -> bands -> buckets
@@ -46,12 +48,16 @@ def word_shingles(docs: DataFrame, w: int = DEFAULT_SHINGLE_W) -> DataFrame:
 
     Documents shorter than w tokens emit their whole text as the single
     shingle (so every doc participates in dedup)."""
-    toks = tokens_col()
     shingles = F.expr(
-        f"transform(sequence(0, greatest(size(split(trim(text), ' ')) - {w}, 0)), "
-        f"i -> concat_ws(' ', slice(split(trim(text), ' '), i + 1, {w})))")
-    return (docs.select(F.col("doc_id").cast("long").alias("doc_id"),
-                        F.explode(shingles).alias("shingle"))
+        f"transform(sequence(0, greatest(size(toks) - {w}, 0)), "
+        f"i -> concat_ws(' ', slice(toks, i + 1, {w})))")
+    # cast only a non-long doc_id: an identity alias is kept on some plan
+    # paths and dropped on others, and that difference alone stops the
+    # verify's shingle exchange from being reused from the signature path
+    doc_id = (F.col("doc_id") if dict(docs.dtypes)["doc_id"] == "bigint"
+              else F.col("doc_id").cast("long").alias("doc_id"))
+    return (docs.select(doc_id, tokens_col().alias("toks"))
+            .select("doc_id", F.explode(shingles).alias("shingle"))
             .distinct())
 
 
@@ -200,32 +206,37 @@ def dup_edges(docs: DataFrame, threshold: float = 0.7,
 def jaccard(docs: DataFrame, pairs: DataFrame,
             w: int = DEFAULT_SHINGLE_W,
             shingles: DataFrame | None = None) -> DataFrame:
-    """Exact shingle-set Jaccard for given (a, b) pairs:
-    (a, b, jaccard double). Set sizes are broadcast-joined onto the
-    intersection counts; |∩| via a shingle equi-join restricted to the
-    candidate pairs (semi-filtered so only candidate docs' shingles
-    shuffle). Pass ``shingles`` to reuse an already-extracted table."""
-    sh = shingles if shingles is not None else word_shingles(docs, w)
-    ids = (pairs.select(F.col("a").alias("doc_id"))
-           .union(pairs.select("b")).distinct())
-    sh = sh.join(ids, "doc_id", "left_semi")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (pairs
-             .join(sh.select(F.col("doc_id").alias("a"),
-                             F.col("shingle")), "a")
-             .join(sh.select(F.col("doc_id").alias("b"),
-                             F.col("shingle")), ["b", "shingle"])
-             .groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter")))
-    return (pairs
-            .join(inter, ["a", "b"], "left")
-            .na.fill({"inter": 0})
-            .join(sizes.select(F.col("doc_id").alias("a"),
-                               F.col("sz").alias("sza")), "a")
-            .join(sizes.select(F.col("doc_id").alias("b"),
-                               F.col("sz").alias("szb")), "b")
+    """Exact shingle-set Jaccard for given (a, b) pairs: (a, b, jaccard
+    double), one row per distinct pair.
+
+    ONE shingle join: each pair row is exploded into one row per
+    endpoint, (a, b, doc_id=a, side 1) and (a, b, doc_id=b, side 2), and
+    those rows join the shingle table on doc_id. Grouping per (a, b,
+    shingle) ORs the sides (3 = the shingle is in both sets); grouping
+    per (a, b) then counts |A∪B| (shingle groups) and |A∩B| (groups with
+    sides 3). A pair
+    is kept only when both endpoints were seen, so an endpoint without
+    shingles drops it, as the oracle's inner size joins do. inter / union
+    is the same double as inter / (|A| + |B| - inter). Both aggregates
+    share one exchange on (a, b): the join output is repartitioned on the
+    pair, which already clusters the (a, b, shingle) groups. Pass
+    ``shingles`` to reuse an already-extracted table."""
+    sh = (shingles if shingles is not None else word_shingles(docs, w)) \
+        .select("doc_id", "shingle")
+    ends = pairs.select("a", "b", F.inline(F.array(
+        F.struct(F.col("a").alias("doc_id"), F.lit(1).alias("side")),
+        F.struct(F.col("b").alias("doc_id"), F.lit(2).alias("side")))))
+    per_shingle = (ends.join(sh, "doc_id")
+                   .repartition("a", "b")
+                   .groupBy("a", "b", "shingle")
+                   .agg(F.bit_or("side").alias("sides")))
+    return (per_shingle.groupBy("a", "b")
+            .agg(F.count(F.lit(1)).alias("union"),
+                 F.count(F.when(F.col("sides") == 3, 1)).alias("inter"),
+                 F.bit_or("sides").alias("seen"))
+            .filter(F.col("seen") == 3)
             .select("a", "b",
-                    F.round(F.col("inter").cast("double")
-                            / (F.col("sza") + F.col("szb") - F.col("inter")),
+                    F.round(F.col("inter").cast("double") / F.col("union"),
                             6).alias("jaccard")))
 
 
@@ -235,13 +246,14 @@ def minhash_dedup(docs: DataFrame, threshold: float = 0.7,
     """Full MinHash+LSH near-dup pass: verified pairs
     (a, b, jaccard >= threshold).
 
-    The shingle subtree appears several times in this plan (signatures +
-    verify) ON PURPOSE: Catalyst's ReusedExchange dedupes the identical
-    deterministic subtrees at the physical level, so extraction runs once.
-    Forcing a .persist() here instead was MEASURED 2-11x slower (it swaps
-    the reused shuffle for an InMemoryRelation that breaks whole-stage
-    codegen and exchange reuse) — pass ``shingles`` only when a
-    materialized (checkpointed) table already exists."""
+    The shingle subtree appears in this plan once per consumer (the band
+    signatures and the verify's single shingle join) ON PURPOSE: the
+    subtrees are identical and deterministic, so Catalyst's
+    ReusedExchange serves the verify from the signature path's shingle
+    exchange. Forcing a .persist() here instead was MEASURED 2-11x slower
+    (it swaps the reused shuffle for an InMemoryRelation that breaks
+    whole-stage codegen and exchange reuse) — pass ``shingles`` only when
+    a materialized (checkpointed) table already exists."""
     cands = candidate_pairs(minhash_bands_direct(docs, k, r, w))
     return (jaccard(docs, cands, w)
             .filter(F.col("jaccard") >= threshold))
@@ -286,23 +298,34 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     """SimHash sketch: (doc_id, simhash long). Bit j of the sketch is the
     majority vote of bit j over the md5-hashes of the document's distinct
-    tokens (ties -> 0 via strict > comparison). Pure column math —
-    one explode + one agg. 60 bits (the md5_long width, and the widest
-    that keeps every block shift in positive signed-long range) since
-    round 5 — see simhash_pairs for why block width is a scale knob."""
-    toks = (docs.select(F.col("doc_id").cast("long").alias("doc_id"),
-                        F.explode(F.array_distinct(tokens_col()))
-                        .alias("tok"))
-            .withColumn("h", md5_long(F.col("tok"))))
-    votes = [F.sum(F.when(F.shiftright(F.col("h"), j).bitwiseAND(1) == 1,
-                          1).otherwise(-1)).alias(f"v{j}")
-             for j in range(bits)]
-    voted = toks.groupBy("doc_id").agg(*votes)
-    sig = None
-    for j in range(bits):
-        term = F.when(F.col(f"v{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return voted.select("doc_id", sig.cast("long").alias("simhash"))
+    tokens (ties -> 0 via strict > comparison). 60 bits (the md5_long
+    width, and the widest that keeps every block shift in positive
+    signed-long range) since round 5 — see simhash_pairs for why block
+    width is a scale knob.
+
+    Pure column math in two folds: each row's votes are ONE array
+    expression (per bit j, a fold over the row's token hashes adding +1 or
+    -1), one groupBy(doc_id) sums the vote arrays element-wise (rows that
+    share a doc_id add up, as in the oracle), and a second fold packs the
+    bits. The shuffle carries ``bits`` counters per row, not one hash per
+    token; a row without tokens (null text) contributes no votes."""
+    last = bits - 1
+    hashes = F.transform(F.array_distinct(tokens_col()), lambda t: md5_long(t))
+    votes = F.expr(
+        f"transform(sequence(0, {last}), j -> aggregate(h, 0, "
+        f"(acc, x) -> acc + if(shiftright(x, j) & 1 = 1, 1, -1)))")
+    total = F.aggregate(F.collect_list("v"), F.array_repeat(F.lit(0), bits),
+                        lambda acc, v: F.zip_with(acc, v,
+                                                  lambda x, y: x + y))
+    packed = F.expr(
+        f"aggregate(sequence(0, {last}), 0L, (acc, j) -> "
+        f"acc | if(t[j] > 0, shiftleft(1L, j), 0L))")
+    return (docs.select(F.col("doc_id").cast("long").alias("doc_id"),
+                        hashes.alias("h"))
+            .filter(F.size("h") > 0)
+            .select("doc_id", votes.alias("v"))
+            .groupBy("doc_id").agg(total.alias("t"))
+            .select("doc_id", packed.alias("simhash")))
 
 
 def simhash_pairs(docs: DataFrame, bits: int = 60,

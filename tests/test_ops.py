@@ -80,6 +80,57 @@ class TestDedup:
         for r in out.itertuples():
             assert abs(_py_jaccard(texts[r.a], texts[r.b]) - r.jaccard) < 1e-6
 
+    def test_jaccard_matches_python_edge_cases(self, spark):
+        """dedup.jaccard against _py_jaccard: a self pair gives 1.0, a
+        pair with no shared shingle is kept at 0.0, a pair with an endpoint
+        missing from docs is dropped, a duplicated pair gives ONE row with
+        the true value, and the shingles= path gives the same rows."""
+        texts = {1: "a b c d e f g h", 2: "p q r s t u",
+                 3: "a b c d e f g x", 4: "short doc"}
+        docs = spark.createDataFrame(
+            pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())}))
+        pairs = spark.createDataFrame(
+            [(1, 1), (1, 2), (1, 99), (1, 3), (1, 3), (3, 4)],
+            "a long, b long")
+        expected = {(a, b): _py_jaccard(texts[a], texts[b])
+                    for a, b in [(1, 1), (1, 2), (1, 3), (3, 4)]}
+        assert expected[(1, 1)] == 1.0 and expected[(1, 2)] == 0.0
+        assert expected[(1, 3)] == 0.6
+        sh = dedup.word_shingles(docs).localCheckpoint()
+        for out in (dedup.jaccard(docs, pairs),
+                    dedup.jaccard(docs, pairs, shingles=sh)):
+            rows = [(r.a, r.b, r.jaccard) for r in out.collect()]
+            assert len(rows) == len(expected), rows
+            assert {(a, b): j for a, b, j in rows} == expected
+
+    def test_simhash_matches_python_majority_vote(self, spark, docs_pdf):
+        """dedup.simhash against a pure-Python majority vote: md5 -> first
+        15 hex digits -> int, bits 0..59, votes summed over the distinct
+        tokens of every row of a doc_id, a tie gives 0."""
+        planted = pd.DataFrame({
+            "doc_id": [900001, 900002, 900002],
+            # 900001: two tokens, so every bit where they differ ties;
+            # 900002: two rows (their votes add up, "x" votes twice)
+            "text": ["alpha beta", "x y z y", "x w"]})
+        pdf = pd.concat([docs_pdf[["doc_id", "text"]], planted],
+                        ignore_index=True)
+
+        def h(tok):
+            return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
+
+        votes: dict[int, list[int]] = {}
+        for doc_id, txt in zip(pdf["doc_id"], pdf["text"]):
+            v = votes.setdefault(int(doc_id), [0] * 60)
+            for tok in set(txt.strip().split(" ")):
+                for j in range(60):
+                    v[j] += 1 if (h(tok) >> j) & 1 else -1
+        expected = {d: sum(1 << j for j in range(60) if v[j] > 0)
+                    for d, v in votes.items()}
+        assert 0 in votes[900001]          # the tie case is exercised
+        got = {r.doc_id: r.simhash for r in
+               dedup.simhash(spark.createDataFrame(pdf)).collect()}
+        assert got == expected
+
     def test_simhash_block_join_equals_bruteforce(self, docs):
         sig = dedup.simhash(docs).toPandas()
         h = sig.set_index("doc_id")["simhash"]

@@ -1139,6 +1139,40 @@ class TestIncrementalCC:
             assert res[st].exceptAll(ref[st]).count() == 0
             assert ref[st].exceptAll(res[st]).count() == 0
 
+    def test_extension_thread_failure_resumes(
+            self, spark, cfg, tmp_path, monkeypatch):
+        """A failure inside run_pipeline's extension thread (the phash
+        SimHash pass, run concurrently with the signature chain)
+        propagates out of run_pipeline; a resume yields the cc and
+        clusters rows of an uninterrupted build."""
+        from apollo_spark import synth
+        from apollo_spark.checkpoint import CheckpointCatalog
+        from apollo_spark.pipeline import run_pipeline
+        monkeypatch.setattr(cc_st, "CC_ROWS_PER_PARTITION", 30)  # 4 parts
+        images = spark.createDataFrame(
+            synth.gen_corpus(120, seed=31).drop(columns=["gt_cluster"]))
+        real_simhash_pairs = candidates.simhash_pairs
+
+        def failing_simhash_pairs(*a, **kw):
+            raise RuntimeError("simulated extension failure")
+
+        out = str(tmp_path / "run")
+        monkeypatch.setattr(candidates, "simhash_pairs",
+                            failing_simhash_pairs)
+        with pytest.raises(RuntimeError, match="simulated extension"):
+            run_pipeline(spark, images, cfg, out, extensions=True)
+        monkeypatch.setattr(candidates, "simhash_pairs", real_simhash_pairs)
+        cat = CheckpointCatalog(spark, out, cfg)
+        assert not cat.is_complete("simhash_pairs")
+        assert not cat.is_complete("cc")
+        res = run_pipeline(spark, images, cfg, out, extensions=True)
+        ref = run_pipeline(spark, images, cfg, str(tmp_path / "ref"),
+                           extensions=True)
+        for st in ("cc", "clusters"):
+            assert cat.stage_info(st)["cc_parts"] == 4
+            assert res[st].exceptAll(ref[st]).count() == 0
+            assert ref[st].exceptAll(res[st]).count() == 0
+
     def test_delta_fingerprint_multiplicity(self, spark):
         """ADVICE r3: a row-level bit_xor cancels even-multiplicity rows —
         {x,x,y} and {w,w,y} must NOT alias; order must not matter; changed

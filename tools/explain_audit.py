@@ -94,6 +94,22 @@ def main() -> int:
         [("broadcast join used", "BroadcastHashJoin" in p),
          ("left semi", "LeftSemi" in p)]))
 
+    import re
+
+    def _join_keys(p: str) -> list[str]:
+        # left-key list of every join node, attribute ids stripped:
+        # "(63) BroadcastHashJoin ... Left keys [1]: [doc_id#12L]" -> "doc_id"
+        return [re.sub(r"#\d+L?", "", k) for k in re.findall(
+            r"\(\d+\) \w*Join[^\n]*\nLeft keys \[\d+\]: \[([^\]]*)\]", p)]
+
+    def _one_shingle_join(p: str) -> bool:
+        # the exact-Jaccard verify joins the pair endpoints to the shingle
+        # table ONCE, on doc_id: no semi-join on the candidate ids, no
+        # per-endpoint size or intersection join keyed on a or b
+        keys = _join_keys(p)
+        return (keys.count("doc_id") == 1
+                and not any(k.split(", ")[0] in ("a", "b") for k in keys))
+
     # 5. salted candidate pair join (text ladder): join key carries the
     # salt; no cartesian product anywhere in the quadratic step
     from apollo_spark.ops import dedup, similarity
@@ -148,11 +164,17 @@ def main() -> int:
     # same salted device as the MinHash pair join
     sh = dedup.simhash_pairs(docs)
     p = plan_of(sh)
+    sketch_aggs = [int(n) for n in re.findall(
+        r"Keys \[1\]: \[doc_id#\d+L?\]\nFunctions \[(\d+)\]", p)]
     sections.append((
         "simhash Hamming-ball block join (salted)", p,
         [("salt in the block join key", "__sa" in p and "__sb" in p),
          ("block join pinned to shuffle_hash", "ShuffledHashJoin" in p),
-         ("no cartesian product", "CartesianProduct" not in p)]))
+         ("no cartesian product", "CartesianProduct" not in p),
+         # the sketch aggregate sums ONE vote-array column per doc_id (a
+         # zip_with fold over the rows' vote arrays), not 60 per-bit sums
+         ("sketch aggregate carries one vote column, not one per bit",
+          bool(sketch_aggs) and all(n == 1 for n in sketch_aggs))]))
 
     # 6d. incremental delta pair-gen: corpus side is a two-column phash
     # projection semi-joined to delta-touched buckets — no caption/bytes
@@ -196,7 +218,14 @@ def main() -> int:
         [("ReusedExchange dedupes the repeated shingle subtree",
           "ReusedExchange" in p),
          ("no InMemoryRelation (no forced persist in the plan)",
-          "InMemoryRelation" not in p and "InMemoryTableScan" not in p)]))
+          "InMemoryRelation" not in p and "InMemoryTableScan" not in p),
+         ("exact-Jaccard verify is ONE shingle join (on doc_id; no "
+          "semi, size or pair-keyed joins)", _one_shingle_join(p)),
+         # word_shingles leaves a long doc_id un-aliased so this holds
+         ("the verify's shingle rows come from a ReusedExchange",
+          re.search(r"ReusedExchange \[Reuses operator id: \d+\]\n"
+                    r"Output \[2\]: \[doc_id#\d+L?, shingle#\d+\]", p)
+          is not None)]))
 
     # 9. resize_dims: metadata-only resize plan — the multi-MB bytes column
     # must be pruned from the scan and the math must stay in codegen
@@ -223,7 +252,9 @@ def main() -> int:
          ("shingle join pinned to shuffle_hash", "ShuffledHashJoin" in p),
          ("no cartesian product", "CartesianProduct" not in p),
          ("df census reused as shard divisor (no second count agg on "
-          "the capped table)", p.count("HashAggregate") >= 2)]))
+          "the capped table)", p.count("HashAggregate") >= 2),
+         ("exact-Jaccard verify is ONE shingle join (on doc_id; no "
+          "semi, size or pair-keyed joins)", _one_shingle_join(p))]))
 
     # 11. clusters checkpoint: hash-partitioned on the component rep —
     # a per-cluster probe prunes to one partition (the same layout the
@@ -279,7 +310,6 @@ def main() -> int:
     # would broadcast and hide the co-partitioning property that carries
     # the 480k-corpus win (at real scale sym is way past any broadcast
     # threshold, so the exchange-free sort-merge path IS the plan).
-    import re
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
     star = cc_mod.star_edges(hashst.bands(sigs, cfg)).localCheckpoint()
     sym_df, labels_df = cc_mod.fixpoint_state(star, npart)
@@ -366,12 +396,10 @@ def main() -> int:
           all(c not in p.split("ReadSchema")[1].split("\n")[0]
               for c in ("lang", "source", "n_chars")))]))
 
-    import re as _re
-
     def _plain_exchanges(p: str) -> int:
         # detail-header count of shuffle exchanges; "(25) BroadcastExchange"
         # does not match because of the required space before "Exchange"
-        return len(_re.findall(r"\(\d+\) Exchange", p))
+        return len(re.findall(r"\(\d+\) Exchange", p))
 
     # 16. span dedup (round 6): C4-style first-occurrence election must be
     # a map-side-combinable aggregate (partial before the exchange), not a
