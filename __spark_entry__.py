@@ -128,7 +128,7 @@ def _flagship_bands(images: DataFrame, cfg: PipelineConfig) -> DataFrame:
     consumers: the vocab agg and the kernel; per-partition row order —
     the doc-contiguity contract — survives a localCheckpoint). Falls
     back to the shuffle path when the vocabulary exceeds
-    cfg.mapside_vocab_max, exactly as the pipeline does
+    hashst.MAPSIDE_VOCAB_MAX, exactly as the pipeline does
     (hashst.signatures_auto)."""
     feats = bags_stage.extract_features(images, cfg).localCheckpoint()
     ndocs = images.count()

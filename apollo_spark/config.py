@@ -56,13 +56,6 @@ class PipelineConfig:
     # reference's default); infomap optimizes the map equation.
     community_algorithm: str = "label_propagation"
 
-    # signatures path choice: fresh builds compute signatures map-side
-    # (hashst.signatures_mapside — no groupBy shuffle) with the vocabulary
-    # BROADCAST into the weight join; above this row count the broadcast is
-    # no longer cheap (~24 B/row -> ~100 MB at the bound) and the pipeline
-    # falls back to the shuffle+collect_list path. 0 disables mapside.
-    mapside_vocab_max: int = 4_000_000
-
     # Scale / skew controls (north_rule: salted repartitioning + AQE)
     bucket_pair_cap: int = 64       # buckets larger than this never emit quadratic
                                     # pairs (linear/bipartite mode instead) —

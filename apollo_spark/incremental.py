@@ -24,9 +24,13 @@ Cassandra writes (bags.py:23, hasher.py:186-201), hashes-only resetdb
      incremental_components_parts): a converged labeling is a spanning
      star of each old component, so CC re-runs only over delta-touched
      buckets plus the old components they collide with, through the same
-     size-gated dispatcher as a full build; the hash-partitioned cc and
-     clusters tables dynamic-overwrite only the partitions of the affected
-     components, and only the genuinely cheap derived stages (substring
+     size-gated dispatcher as a full build. Whichever side of the
+     dispatcher ran, one Spark write path follows: the relabeled rows get
+     the tables' partition column, one collect yields the touched
+     partitions, and the hash-partitioned cc and clusters tables
+     dynamic-overwrite only those (clusters rows derived by stages/cc.
+     clusters, as a full build does) while the delta's singletons append
+     as new files. Only the genuinely cheap derived stages (substring
      census, refinement, eval) rebuild.
 
 Cost per delta: O(|delta|) extraction+hashing + narrow corpus-side scans
@@ -241,7 +245,7 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
                                               "left_semi"), cfg)
             memb = memb.unionByName(m2).unionByName(
                 candidates.pairs_as_membership(new_pairs))
-        affected, relabeled, singles, rel_local = \
+        affected, relabeled, singles = \
             cc_stage.incremental_components_parts(
                 old_cc, cc_stage.star_edges(memb),
                 new_images.select("image_id"), cfg)
@@ -250,68 +254,32 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
         # O(affected + |delta|) IO, three writes (cc overwrite, singles
         # append, clusters overwrite), with the phase's JOB COUNT kept low
         # (VERDICT r6 #1: cc_write was 7.5-9.5 s of a ~20 s append, nearly
-        # all fixed per-job overhead, not bytes):
-        #   * when the union-find ran (``rel_local`` — the steady-state
-        #     micro-append), ``relabeled`` is a local relation and
-        #     ``affected`` is bounded by the edge cap: ONE bounded collect
-        #     fetches the affected ids, and the touched-partition set is
-        #     computed DRIVER-side with the xxhash64 twin (bit-parity with
-        #     Spark's string xxhash64 is pytest-pinned);
-        #   * cc content, the singles append input and the clusters
-        #     content all read PRE-overwrite tables, so they materialize
-        #     in ONE tagged-union localCheckpoint instead of three separate
-        #     ones, and both present-partition sets come from ONE collect
-        #     over that checkpoint (round 6's collect-to-driver A/B
-        #     rejected replacing DISTRIBUTED work with collects; this
-        #     keeps every distributed piece distributed and only merges
-        #     the blocking materialization points).
-        spark_s = new_images.sparkSession
-        # the modulus the tables were laid out with, never re-derived from
-        # the grown corpus: the trailing run_pipeline relayouts both tables
-        # once the corpus needs twice this count
+        # all fixed per-job overhead, not bytes). ``relabeled`` comes back
+        # from the CC dispatcher already materialized (a local relation
+        # from the union-find, or the fixpoint's counted checkpoint), so
+        # the partition column and the clusters derivation below are
+        # projections and one small aggregate over it; ``affected`` is
+        # checkpointed once because the touched-partition collect and both
+        # anti-joins read it. The cc content, the singles append input and
+        # the clusters content all read PRE-overwrite tables, so they
+        # materialize in ONE tagged-union localCheckpoint, and both
+        # present-partition sets come from ONE collect over it. Both sides
+        # of the dispatcher take this one write path.
+        #
+        # parts_n is the modulus the tables were laid out with, never
+        # re-derived from the grown corpus: the trailing run_pipeline
+        # relayouts both tables once the corpus needs twice this count
         parts_n = cat.stage_info("cc")["cc_parts"]
+        affected = affected.localCheckpoint()
         relabeled = cc_stage.with_cc_partition(relabeled, parts_n)
         singles = cc_stage.with_cc_partition(singles, parts_n)
-        if rel_local is not None:
-            import pandas as pd
-
-            from apollo_spark.core.xxh import xxhash64_str
-            aff_ids = sorted(r["cc_id"] for r in affected.collect())
-            affected = spark_s.createDataFrame(
-                pd.DataFrame({"cc_id": aff_ids}), "cc_id string") \
-                if aff_ids else spark_s.createDataFrame([], "cc_id string")
-            # touched set computed entirely driver-side: the union-find
-            # labels are already local rows, and Python's % on the
-            # xxhash64 twin IS Spark's pmod for positive moduli
-            touched = ({xxhash64_str(c) % parts_n for c in aff_ids}
-                       | {xxhash64_str(cc) % parts_n
-                          for _n, cc in rel_local})
-            # clusters rows for the relabeled components, also driver-side
-            # (n >= 2 filter + xxhash64 surrogate id — the same math
-            # with_clusters_partition/clusters express in SQL; xxhash64
-            # twin parity is pytest-pinned), sparing the combined
-            # materialization job a groupBy+join subtree
-            from collections import Counter
-            ccnt = Counter(cc for _n, cc in rel_local)
-            cl_schema = "cluster_id long, rep string, image_id string, p int"
-            cl_rows = [(xxhash64_str(cc), cc, img,
-                        xxhash64_str(cc) % parts_n)
-                       for img, cc in rel_local if ccnt[cc] >= 2]
-            new_cl = spark_s.createDataFrame(
-                pd.DataFrame(cl_rows, columns=[
-                    "cluster_id", "rep", "image_id", "p"]),
-                cl_schema) if cl_rows else \
-                spark_s.createDataFrame([], cl_schema)
-        else:
-            affected = affected.localCheckpoint()
-            relabeled = relabeled.localCheckpoint()
-            touched = {r["p"] for r in relabeled.select("p")
-                       .unionByName(cc_stage.with_cc_partition(
-                           affected, parts_n).select("p"))
-                       .distinct().collect()}
-            new_cl = cc_stage.with_clusters_partition(
-                cc_stage.clusters(relabeled.select("image_id", "cc_id")),
-                parts_n)
+        touched = {r["p"] for r in relabeled.select("p")
+                   .unionByName(cc_stage.with_cc_partition(
+                       affected, parts_n).select("p"))
+                   .distinct().collect()}
+        new_cl = cc_stage.with_clusters_partition(
+            cc_stage.clusters(relabeled.select("image_id", "cc_id")),
+            parts_n)
         # an incomplete clusters stage is left to the trailing run_pipeline,
         # which derives it from the updated cc table
         cl_incremental = touched and cat.is_complete("clusters")
@@ -392,13 +360,10 @@ def _append_images_batched(spark, cat, all_images, new_images, cfg,
         tasks = [_write_cc]
         if cl_incremental:
             tasks.append(_write_clusters)
-        if len(tasks) == 1:
-            tasks[0]()
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-                for f in [pool.submit(t) for t in tasks]:
-                    f.result()   # propagate the first failure
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+            for f in [pool.submit(t) for t in tasks]:
+                f.result()   # propagate the first failure
     else:
         cat.reset([s for s in DERIVED_STAGES] + ["cc", "clusters"])
     cat.commit_delta(delta_id)

@@ -30,7 +30,7 @@ handles residual skew.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from apollo_spark.ops.skew import SALT_TARGET, salted_pairs
@@ -148,15 +148,25 @@ def candidate_pairs(bands: DataFrame,
                     salt_target: int = SALT_TARGET) -> DataFrame:
     """Co-bucketed pairs (a < b), distinct across bands — the J2 bucket
     self-join. Oversized buckets are routed to linear mode by
-    hot_bucket_edges before the quadratic step (lsh_buckets' cap).
+    hot_bucket_edges before the quadratic step (lsh_buckets' bounds).
+
+    The bucket census is ONE window count over (band_idx, band_key) on the
+    band rows themselves, filtered to lsh_buckets' [2, BUCKET_CAP]: a
+    groupBy census joined back would read ``bands`` twice, and on a lazy
+    lineage that re-runs the shingle and band aggregations. Rows without
+    a doc_id can be in no pair and are dropped before the census; the
+    filter also reaches the shingle scan, which keeps that subtree equal
+    to the verify's (minhash_dedup's ReusedExchange).
 
     SALTED SKEW JOIN (north_rule: salted repartitioning): without salting,
     a bucket at the 512 cap lands its entire 512² = 262k-pair cross product
     on ONE shuffle task — ops.skew.salted_pairs shards it (semantics-free;
-    see that module). The bucket census's ``n`` is reused as the shard
-    divisor, so no extra count aggregation runs."""
-    ok = lsh_buckets(bands)                      # (band_idx, band_key, n)
-    m = bands.join(ok, ["band_idx", "band_key"])
+    see that module). The census's ``n`` is reused as the shard divisor,
+    so no extra count aggregation runs."""
+    n = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_key"))
+    m = (bands.filter(F.col("doc_id").isNotNull())
+         .withColumn("n", n)
+         .filter((F.col("n") >= 2) & (F.col("n") <= BUCKET_CAP)))
     return (salted_pairs(m, ["band_idx", "band_key"], "doc_id",
                          salt_target=salt_target, n_col="n")
             .select("a", "b").distinct())
@@ -397,6 +407,5 @@ def connected_components_pairs(pairs: DataFrame,
              # graph) reads the persisted partitions instead of re-running
              # the candidate+verify chain
              .localCheckpoint(eager=False))
-    labels, _ = cc_stage.components_from_edges(
+    return cc_stage.components_from_edges(
         edges, max_iter, out_schema="doc_id long, cc_id long")
-    return labels

@@ -33,19 +33,12 @@ simhash_pairs phash twin), and the ANN/IVF candidate joins
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_TARGET = 64    # max a-side rows per (bucket, salt) join shard
-
-# Escape hatch (ADVICE r5 #2): set SPARK_GRAFT_NO_SHJ_PIN=1 to drop the
-# shuffle_hash hint and let Catalyst/AQE pick the strategy (sort-merge can
-# spill; SHJ cannot). See the per-TASK build-size note at the hint site
-# for when this is the right trade.
-_NO_SHJ_PIN = os.environ.get("SPARK_GRAFT_NO_SHJ_PIN", "") == "1"
 
 
 def salted_pairs(df: DataFrame, keys: Sequence[str], id_col: str,
@@ -106,12 +99,10 @@ def salted_pairs(df: DataFrame, keys: Sequence[str], id_col: str,
     # ~(total build rows · avg s) / spark.sql.shuffle.partitions — not
     # salt_target. SHJ cannot spill or fall back to sort-merge, so at
     # extreme scale raise shuffle.partitions with the data (the engine's
-    # per-cell work stays flat either way), keep AQE skew-split on as the
-    # backstop, or set SPARK_GRAFT_NO_SHJ_PIN=1 to drop the hint and let
-    # sort-merge spill — accepting that AQE may then broadcast-convert
-    # and re-create the measured 92x stream-side hot block, so only
-    # combine it with a disabled/raised broadcast threshold.
-    right = b if _NO_SHJ_PIN else b.hint("shuffle_hash")
-    return (a.join(right, [*keys, "__sa", "__sb"])
+    # per-cell work stays flat either way) and keep AQE skew-split on as
+    # the backstop. Dropping the hint to let sort-merge spill would let
+    # AQE broadcast-convert again and re-create the measured 92x
+    # stream-side hot block.
+    return (a.join(b.hint("shuffle_hash"), [*keys, "__sa", "__sb"])
             .filter(F.col("a") < F.col("b"))
             .drop(*keys, "__sa", "__sb"))

@@ -195,26 +195,22 @@ def label_fixpoint(edges: DataFrame, max_iter: int) -> DataFrame:
 # >= 2 blocking rounds cost more than one collect at ANY cluster size,
 # while an over-bound graph always takes the distributed path, so a
 # corpus-scale build (the 1->4 scaling harness's 480k corpus carries ~677k
-# edges) still measures the real fixpoint. Env-overridable for production
-# tuning and for tests that pin the distributed path
-# (SPARK_GRAFT_CC_DRIVER_MAX=0 disables the short-circuit entirely).
-import os as _os
-
-CC_DRIVER_EDGES_MAX = int(
-    _os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "100000"))
+# edges) still measures the real fixpoint. Read at call time, so tests and
+# the benchmark pin either side by setting the attribute (0 disables the
+# short-circuit entirely).
+CC_DRIVER_EDGES_MAX = 100_000
 
 
 def _labels_driver_side(spark, rows,
                         out_schema: str = "image_id string, cc_id string"
-                        ) -> tuple[DataFrame, list[tuple]]:
+                        ) -> DataFrame:
     """Union-find over an already-COLLECTED edge list -> the same
     (node, cc_id = min member id) labeling label_fixpoint converges to,
-    as (LOCAL relation, the same rows as Python tuples). Only called
-    under CC_DRIVER_EDGES_MAX (the caller's bounded limit-collect caps it
-    at a few MB of id pairs); path-halving find keeps it near-linear. Ids
-    may be strings or ints — Python min == F.min for both. Downstream
-    consumers can collect or join the relation without re-running any
-    corpus scan."""
+    as a LOCAL relation. Only called under CC_DRIVER_EDGES_MAX (the
+    caller's bounded limit-collect caps it at a few MB of id pairs);
+    path-halving find keeps it near-linear. Ids may be strings or ints —
+    Python min == F.min for both. Downstream consumers can collect or join
+    the relation without re-running any corpus scan."""
     parent: dict = {}
 
     def find(x):
@@ -242,41 +238,38 @@ def _labels_driver_side(spark, rows,
     # pandas + Arrow upload: createDataFrame(list-of-tuples) goes through
     # the pickled-RDD path and cost ~1 s per round-trip at bench scale
     # (measured round 7); the Arrow path is ~free at these sizes
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame(out, columns=cols), out_schema) if out else \
         spark.createDataFrame(out, out_schema)
-    return df, out
 
 
 def components_from_edges(edges: DataFrame, max_iter: int,
                           out_schema: str = "image_id string, cc_id string"
-                          ) -> tuple[DataFrame, list[tuple] | None]:
+                          ) -> DataFrame:
     """Size-adaptive CC over a MATERIALIZED (image_id, rep) edge list ->
-    (labels, driver_rows): one bounded limit-collect probes the edge count
-    AND fetches the edges; at or under CC_DRIVER_EDGES_MAX the driver
-    union-find produces the identical labeling in ~zero jobs, above it the
-    truncated probe is discarded and the distributed label fixpoint runs
-    (the one CC dispatcher, shared by EVERY CC entry point — at bench
-    scale the fixpoint's per-round driver barrier, not data, dominated
-    dedup_cc and the e2e cc stage, the same regime logic as the cosine
-    exact-vs-ANN crossover dispatcher). ``driver_rows`` holds the labeling
-    as (id, cc_id) tuples when the union-find ran — bounded by the cap, so
-    a driver-side caller may use them without a Spark job — and None when
-    the fixpoint ran. ``edges`` must already be
-    localCheckpoint/parquet-materialized."""
+    labels (node, cc_id = min member id) for every endpoint. One bounded
+    limit-collect probes the edge count AND fetches the edges; at or under
+    CC_DRIVER_EDGES_MAX the driver union-find produces the identical
+    labeling as a local relation, above it the truncated probe is
+    discarded and the distributed label fixpoint runs. The one CC
+    dispatcher, shared by EVERY CC entry point: at bench scale the
+    fixpoint's per-round driver barrier, not data, dominated dedup_cc and
+    the e2e cc stage (the same regime logic as the cosine exact-vs-ANN
+    crossover dispatcher). Either way the labels come back materialized —
+    a local relation, or the fixpoint's last counted checkpoint — so a
+    caller may read them several times without re-running CC. ``edges``
+    must already be localCheckpoint/parquet-materialized."""
     cap = CC_DRIVER_EDGES_MAX
     rows = edges.limit(cap + 1).collect() if cap > 0 else None
     if rows is not None and len(rows) <= cap:
         return _labels_driver_side(edges.sparkSession, rows, out_schema)
-    labels = label_fixpoint(edges, max_iter)
     out_cols = [f.split()[0] for f in out_schema.split(",")]
-    return labels.toDF(*out_cols), None
+    return label_fixpoint(edges, max_iter).toDF(*out_cols)
 
 
 def incremental_components_parts(old_cc: DataFrame, new_edges: DataFrame,
                                  new_ids: DataFrame, cfg: PipelineConfig
-                                 ) -> tuple[DataFrame, DataFrame, DataFrame,
-                                            list[tuple] | None]:
+                                 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Warm-start CC for an incremental append: merge ``new_edges`` (star
     edges from delta-touched buckets + delta pair edges) into a CORRECT
     previous fixpoint ``old_cc`` without re-running CC over the corpus.
@@ -296,24 +289,20 @@ def incremental_components_parts(old_cc: DataFrame, new_edges: DataFrame,
     Returns the pieces separately so the caller can choose the write
     strategy per piece:
 
-      (affected old cc_ids, relabeled rows, singleton rows, driver_rows)
+      (affected old cc_ids, relabeled rows, singleton rows)
 
-    ``relabeled`` = members of affected components with their merged
-    labels — SMALL (only components the delta actually collides with) and
-    the only rows superseding existing table content, so a partitioned
-    table dynamic-overwrites just their partitions. ``singles`` = delta
-    ids in no multi bucket — brand-new keys superseding nothing, so they
-    APPEND as new files without touching any existing partition (they
-    hash-scatter by own id; overwriting their partitions would rewrite the
-    whole table and defeat the point). Everything else is byte-identical
-    to old_cc: the full table is ``old_cc`` minus the affected components,
-    plus ``relabeled`` and ``singles``.
-
-    ``driver_rows`` = the relabeled rows as local (image_id, cc_id)
-    tuples when the union-find ran, else None: |affected| / |relabeled|
-    are then bounded by CC_DRIVER_EDGES_MAX, so the caller may collect
-    them for driver-side bookkeeping (touched-partition sets, anti-join
-    literals) without an unbounded-collect hazard on a mega-append."""
+    ``affected`` is lazy. ``relabeled`` = members of affected components
+    with their merged labels, as the dispatcher returns them (already
+    materialized) — SMALL (only components the delta actually collides
+    with) and the only rows superseding existing table content, so a
+    partitioned table dynamic-overwrites just their partitions.
+    ``singles`` = delta ids in no multi bucket — brand-new keys
+    superseding nothing, so they APPEND as new files without touching any
+    existing partition (they hash-scatter by own id; overwriting their
+    partitions would rewrite the whole table and defeat the point).
+    Everything else is byte-identical to old_cc: the full table is
+    ``old_cc`` minus the affected components, plus ``relabeled`` and
+    ``singles``."""
     new_edges = new_edges.localCheckpoint()
     endpoints = (new_edges.select("image_id")
                  .unionByName(new_edges.select(F.col("rep")
@@ -333,13 +322,12 @@ def incremental_components_parts(old_cc: DataFrame, new_edges: DataFrame,
     # a lazy form would compute its lineage twice inside the one job
     edges = (new_edges.unionByName(star_old).distinct()
              .localCheckpoint(eager=False))
-    labels, driver_rows = components_from_edges(edges,
-                                                cfg.max_cc_iterations)
+    labels = components_from_edges(edges, cfg.max_cc_iterations)
     singles = (new_ids.select("image_id")
                .join(labels.select("image_id"), "image_id", "left_anti")
                .join(old_cc.select("image_id"), "image_id", "left_anti")
                .withColumn("cc_id", F.col("image_id")))
-    return affected, labels, singles, driver_rows
+    return affected, labels, singles
 
 
 def connected_components(bands: DataFrame, cfg: PipelineConfig,
@@ -369,7 +357,7 @@ def connected_components(bands: DataFrame, cfg: PipelineConfig,
     pair), and partitions it leaves uncomputed on an over-cap graph are
     computed and persisted by fixpoint round 1."""
     edges = star_edges(bands).localCheckpoint(eager=False)
-    cc, _ = components_from_edges(edges, cfg.max_cc_iterations)
+    cc = components_from_edges(edges, cfg.max_cc_iterations)
     if all_ids is not None:
         singletons = (all_ids.select("image_id")
                       .join(cc.select("image_id"), "image_id", "left_anti")

@@ -27,6 +27,11 @@ from apollo_spark.core import wmh
 
 SIGNATURES_SCHEMA = "image_id string, sig binary"
 
+# Largest vocabulary signatures_auto still hands to the mapside kernel:
+# the kernel broadcasts the (hash, df) array pair (~24 B per entry ->
+# ~100 MB at the bound); above it the shuffle path runs.
+MAPSIDE_VOCAB_MAX = 4_000_000
+
 
 def signatures(bags: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """(image_id, feat_hash, weight) -> (image_id, sig).
@@ -172,24 +177,31 @@ def signatures_mapside(features: DataFrame, vocab_hashes: np.ndarray,
             .mapInPandas(kernel, schema=SIGNATURES_SCHEMA))
 
 
+def vocab_arrays(vocab: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """vocab(feat_hash, df) -> (feat_hash as uint64, df as float64), both
+    sorted by hash: the broadcast lookup pair signatures_mapside takes."""
+    vp = vocab.select("feat_hash", "df").toPandas()
+    vh = vp["feat_hash"].to_numpy().astype(np.int64).view(np.uint64)
+    vdf = vp["df"].to_numpy().astype(np.float64)
+    order = np.argsort(vh)
+    return vh[order], vdf[order]
+
+
 def signatures_auto(features: DataFrame | None, vocab: DataFrame,
                     ndocs: int, bags: DataFrame,
                     cfg: PipelineConfig) -> DataFrame:
     """The one choice between the two signature paths: the shuffle-free
     ``signatures_mapside`` over the extraction rows ``features`` when they
-    are given and the vocabulary fits cfg.mapside_vocab_max (which bounds
-    the broadcast (hash, df) array pair), else the grouping-shuffle
+    are given and the vocabulary fits MAPSIDE_VOCAB_MAX (which bounds the
+    broadcast (hash, df) array pair), else the grouping-shuffle
     ``signatures`` over the weighted ``bags``. Pass ``features=None`` when
     the extraction rows are not known to be doc-contiguous — e.g. when the
     bags come from a checkpoint read-back, whose row-group splits can cut
     a doc. ``bags`` may be a lazy lineage: only the fallback reads it."""
-    if features is None or vocab.count() > cfg.mapside_vocab_max:
+    if features is None or vocab.count() > MAPSIDE_VOCAB_MAX:
         return signatures(bags, cfg)
-    vp = vocab.select("feat_hash", "df").toPandas()
-    vh = vp["feat_hash"].to_numpy().astype(np.int64).view(np.uint64)
-    vdf = vp["df"].to_numpy().astype(np.float64)
-    order = np.argsort(vh)
-    return signatures_mapside(features, vh[order], vdf[order], ndocs, cfg)
+    vh, vdf = vocab_arrays(vocab)
+    return signatures_mapside(features, vh, vdf, ndocs, cfg)
 
 
 def bands(signatures_df: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -91,13 +91,8 @@ class TestHashStage:
     @staticmethod
     def _mapside_inputs(images, cfg):
         feats = bags_st.extract_features(images, cfg)
-        ndocs = images.count()
-        vp = bags_st.vocab_table(feats, cfg) \
-            .select("feat_hash", "df").toPandas()
-        vh = vp["feat_hash"].to_numpy().astype(np.int64).view(np.uint64)
-        vdf = vp["df"].to_numpy().astype(np.float64)
-        o = np.argsort(vh)
-        return feats, vh[o], vdf[o], ndocs
+        vh, vdf = hashst.vocab_arrays(bags_st.vocab_table(feats, cfg))
+        return feats, vh, vdf, images.count()
 
     def test_mapside_matches_shuffle_path(self, images, sigs, cfg):
         """signatures_mapside (no groupBy, no join; in-kernel vocab prune +
@@ -787,7 +782,7 @@ class TestIncrementalCC:
         """The full cc table from incremental_components_parts' pieces:
         old_cc minus the affected components, plus the relabeled rows and
         the new singletons."""
-        affected, relabeled, singles, _ = \
+        affected, relabeled, singles = \
             cc_st.incremental_components_parts(old_cc, new_edges, new_ids,
                                                cfg)
         return (old_cc.join(affected, "cc_id", "left_anti")
@@ -1000,6 +995,75 @@ class TestIncrementalCC:
                             str(tmp_path / "full"))
         assert {(r["image_id"], r["cc_id"]) for r in full["cc"]
                 .select("image_id", "cc_id").collect()} == set(got.items())
+
+    def test_append_colliding_with_nothing(
+            self, spark, cfg, tmp_path, monkeypatch):
+        self._isolated_append(spark, cfg, tmp_path, monkeypatch, 100_000)
+
+    def test_append_colliding_with_nothing_fixpoint(
+            self, spark, cfg, tmp_path, monkeypatch):
+        self._isolated_append(spark, cfg, tmp_path, monkeypatch, 0)
+
+    def _isolated_append(self, spark, cfg, tmp_path, monkeypatch, cap):
+        """A delta that collides with nothing, neither the corpus nor
+        itself, touches no partition: every pre-existing cc and clusters
+        file stays byte-unchanged, the delta lands only as new cc files
+        holding its own singletons, and both tables equal a from-scratch
+        rebuild."""
+        import glob
+        import os
+        from pathlib import Path
+
+        import pandas as pd
+        from apollo_spark import synth
+        from apollo_spark.checkpoint import CheckpointCatalog
+        from apollo_spark.incremental import append_images
+        from apollo_spark.pipeline import run_pipeline
+        from pyspark.sql import functions as SF
+        monkeypatch.setattr(cc_st, "CC_DRIVER_EDGES_MAX", cap)
+        # 150 base rows -> 8 partitions, kept by the grown corpus
+        monkeypatch.setattr(cc_st, "CC_ROWS_PER_PARTITION", 19)
+        base = spark.createDataFrame(
+            synth.gen_corpus(150, seed=19).drop(columns=["gt_cluster"]))
+        # only the planted singletons of another seed: fresh content with
+        # no near-copy inside the delta or in the base
+        pdf = synth.gen_corpus(60, seed=777)
+        lone = pdf[pdf.groupby("gt_cluster")["image_id"]
+                   .transform("size") == 1]
+        delta = spark.createDataFrame(lone.drop(columns=["gt_cluster"])) \
+            .withColumn("image_id", SF.concat(SF.lit("d"),
+                                              SF.col("image_id")))
+        delta_ids = {r["image_id"] for r in delta.collect()}
+        assert delta_ids
+        full = base.unionByName(delta)
+        out = str(tmp_path / "run")
+        run_pipeline(spark, base, cfg, out)
+        cat = CheckpointCatalog(spark, out, cfg)
+        assert cat.stage_info("cc")["cc_parts"] == 8
+
+        def snapshot(stage):
+            files = glob.glob(os.path.join(out, stage, "p=*", "*.parquet"))
+            return {f: Path(f).read_bytes() for f in files}
+
+        before = {st: snapshot(st) for st in ("cc", "clusters")}
+        assert before["cc"] and before["clusters"]
+        append_images(spark, full, delta, cfg, out)
+        after = {st: snapshot(st) for st in ("cc", "clusters")}
+        for st in ("cc", "clusters"):
+            assert all(after[st].get(f) == b
+                       for f, b in before[st].items()), st
+        assert set(after["clusters"]) == set(before["clusters"])
+        new_cc = pd.concat(pd.read_parquet(f) for f in
+                           set(after["cc"]) - set(before["cc"]))
+        assert sorted(new_cc["image_id"]) == sorted(delta_ids)
+        assert (new_cc["cc_id"] == new_cc["image_id"]).all()
+        rebuilt = run_pipeline(spark, full, cfg, str(tmp_path / "full"))
+        for st, cols in (("cc", ["image_id", "cc_id"]),
+                         ("clusters", ["cluster_id", "rep", "image_id"])):
+            got = cat.load(st).select(*cols)
+            exp = rebuilt[st].select(*cols)
+            assert got.exceptAll(exp).count() == 0, st
+            assert exp.exceptAll(got).count() == 0, st
 
     def test_crash_between_overwrite_and_singleton_append(
             self, spark, cfg, tmp_path, monkeypatch):
