@@ -9,11 +9,19 @@ the checkpoint — the DataFrame-native analogue of the reference's per-stage
 Cassandra tables / model files (SURVEY.md §2.9: bags.py:23, hasher.py:186-201,
 deferred WMH param reuse hasher.py:159-166).
 
+One write body (``CheckpointCatalog._put``) serves three public writes:
+``write`` replaces the whole table and returns its read-back, ``append``
+adds a delta's files, and ``overwrite_partitions`` replaces the listed
+partitions by clearing them and then appending (the incremental append's
+cc/clusters update). Only ``write`` reads its output back.
+
 Two storage backends behind one surface (north_rule names Iceberg):
 
 * ``backend="iceberg"`` — DataSourceV2 tables in a configured Spark
   catalog: ``df.writeTo(cat.ns.stage).using("iceberg").partitionedBy(...)
-  .createOrReplace()`` / ``.append()``, reads via ``spark.read.table``,
+  .createOrReplace()`` / ``.append()`` (a partition replacement is a
+  ``DELETE`` on the listed partitions, then the append), reads via
+  ``spark.read.table``,
   per-stage Iceberg snapshot ids recorded in the manifest for resume, and
   per-partition lineage from the table's ``.files`` metadata (no rescans).
   Requires the iceberg-spark runtime on the classpath
@@ -81,7 +89,7 @@ class CheckpointCatalog:
         self._ops_batched = 0
         # serializes manifest read-modify-write and metrics recording so
         # INDEPENDENT stage writes may run from a small thread pool
-        # (incremental.py overlaps the cc/clusters/singles writes, guide
+        # (incremental.py overlaps the cc and clusters writes, guide
         # §2.6 'overlap independent jobs'); the Spark actions themselves
         # stay outside the lock and overlap freely
         self._lock = threading.RLock()
@@ -186,128 +194,96 @@ class CheckpointCatalog:
         """Write a stage table + metrics, mark complete, return re-read df.
         ``info`` carries small scalars (e.g. the corpus ndocs alongside the
         vocab table) into the manifest entry."""
+        self._put(stage, df, "overwrite", partition_by, info)
+        return self.load(stage)
+
+    def append(self, stage: str, df: DataFrame,
+               partition_by: list[str] | None = None,
+               info: dict | None = None) -> None:
+        """Append a delta to an existing stage table (incremental runs —
+        the reference's append-mode Cassandra writes, bags.py:23,
+        hasher.py:186-201). Metrics record the delta's files only."""
+        self._put(stage, df, "append", partition_by, info)
+
+    def overwrite_partitions(self, stage: str, df: DataFrame,
+                             partition_by: list[str], partitions: list,
+                             info: dict | None = None) -> None:
+        """Replace the listed ``partitions`` (values of ``partition_by[0]``)
+        by the rows of ``df``: clear them, then append ``df``. Every other
+        partition's files stay untouched — the O(affected) IO path of an
+        incremental append's cc and clusters updates (incremental.
+        append_images). ``df`` may also hold rows of unlisted partitions
+        (brand-new keys); those land as new files beside the old ones.
+        CALLER CONTRACT: ``df`` must be materialized (localCheckpoint) if
+        it reads from the same stage table, since the clear runs first,
+        and must hold the FULL intended content of every listed partition.
+        A crash between the clear and the append leaves the listed
+        partitions empty, so callers run both inside a delta's pending
+        window."""
+        self.clear_partitions(stage, partition_by[0], partitions)
+        self._put(stage, df, "append", partition_by, info)
+
+    def _put(self, stage: str, df: DataFrame, mode: str,
+             partition_by: list[str] | None, info: dict | None) -> None:
+        """The one write body behind write/append/overwrite_partitions:
+        ``mode`` is "overwrite" (a fresh table, its manifest entry
+        replaced) or "append" (new files beside the old, the entry's
+        ``appends`` counted). Metrics record only the files this write
+        added; on Iceberg an append's delta numbers come from the new
+        snapshot's summary instead."""
         t0 = time.time()
         if self.backend == "iceberg":
-            w = df.writeTo(self._table(stage)).using("iceberg")
-            if partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()
+            w = df.writeTo(self._table(stage))
+            if mode == "append":
+                w.append()
+                new_files = []
+            else:
+                w = w.using("iceberg")
+                if partition_by:
+                    w = w.partitionedBy(*[F.col(c) for c in partition_by])
+                w.createOrReplace()
+                new_files = None
         else:
-            w = df.write.mode("overwrite")
+            if partition_by:
+                self._drop_empty_root_files(stage)
+            before = set(self._stage_files(stage))
+            w = df.write.mode(mode)
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(self.path(stage))
             if partition_by and not self._stage_files(stage):
-                # an EMPTY partitioned write emits no data files at all, so
-                # the read-back cannot infer a schema (hit by a clusters
-                # table over a corpus with zero non-singleton components);
-                # rewrite the empty frame flat — 0 rows, schema preserved
+                # an EMPTY partitioned write emits no data files at all; a
+                # table left with none (a fresh write, or an append onto an
+                # empty or fully cleared table) has no schema to read back
+                # (hit by a clusters table over a corpus with zero
+                # non-singleton components); rewrite the empty frame flat —
+                # 0 rows, schema preserved
                 df.limit(0).write.mode("overwrite").parquet(
                     self.path(stage))
-        out = self.load(stage)
-        self._record_metrics(stage, time.time() - t0)
+            new_files = [f for f in self._stage_files(stage)
+                         if f not in before]
+        self._record_metrics(stage, time.time() - t0, files=new_files)
         with self._lock:
             m = self._manifest()
-            if m.get("config_fp") != self.config_fp:
-                m = {"config_fp": self.config_fp, "stages": {}}
-            entry = {"ts": time.time(), "path": self.path(stage)}
+            if mode == "append":
+                entry = m["stages"].setdefault(
+                    stage, {"path": self.path(stage)})
+                entry["appends"] = int(entry.get("appends", 0)) + 1
+            else:
+                if m.get("config_fp") != self.config_fp:
+                    m = {"config_fp": self.config_fp, "stages": {}}
+                entry = m["stages"][stage] = {"path": self.path(stage)}
+            entry["ts"] = time.time()
             if self.backend == "iceberg":
                 entry["table"] = self._table(stage)
                 entry["snapshot_id"] = self._current_snapshot(stage)
             if info:
                 entry.update(info)
-            m["stages"][stage] = entry
             self._save_manifest(m)
-        return out
-
-    def append(self, stage: str, df: DataFrame,
-               partition_by: list[str] | None = None,
-               info: dict | None = None) -> DataFrame:
-        """Append a delta to an existing stage table (incremental runs —
-        the reference's append-mode Cassandra writes, bags.py:23,
-        hasher.py:186-201). Metrics record the delta's partitions only
-        (file list snapshotted before the write; on Iceberg the same
-        delta-only numbers come from the new snapshot's manifest)."""
-        t0 = time.time()
-        if self.backend == "iceberg":
-            df.writeTo(self._table(stage)).append()
-            self._record_metrics(stage, time.time() - t0, files=[])
-        else:
-            if partition_by:
-                self._drop_empty_root_files(stage)
-            before = set(self._stage_files(stage))
-            w = df.write.mode("append")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(self.path(stage))
-            if partition_by and not self._stage_files(stage):
-                # empty table + empty delta: the root cleanup above plus a
-                # 0-row partitioned append (which emits no files) would
-                # leave NO data files — restore the flat schema anchor
-                df.limit(0).write.mode("overwrite").parquet(
-                    self.path(stage))
-            new_files = [f for f in self._stage_files(stage)
-                         if f not in before]
-            self._record_metrics(stage, time.time() - t0, files=new_files)
-        with self._lock:
-            m = self._manifest()
-            entry = m["stages"].setdefault(
-                stage, {"path": self.path(stage)})
-            entry["ts"] = time.time()
-            entry["appends"] = int(entry.get("appends", 0)) + 1
-            if self.backend == "iceberg":
-                entry["snapshot_id"] = self._current_snapshot(stage)
-            if info:
-                entry.update(info)
-            self._save_manifest(m)
-        return self.load(stage)
-
-    def overwrite_partitions(self, stage: str, df: DataFrame,
-                             partition_by: list[str],
-                             info: dict | None = None) -> DataFrame:
-        """Dynamic partition overwrite: replace ONLY the partitions present
-        in ``df``, leaving all other partitions' files untouched — the
-        O(affected) IO path of an incremental append's cc and clusters
-        updates (incremental.append_images). Parquet uses
-        spark.sql.sources.partitionOverwriteMode=dynamic; Iceberg uses the
-        native DataFrameWriterV2.overwritePartitions(). CALLER CONTRACT:
-        ``df`` must be materialized (localCheckpoint) if it reads from the
-        same stage table, and must contain the FULL intended content of
-        every partition it touches."""
-        t0 = time.time()
-        if self.backend == "iceberg":
-            df.writeTo(self._table(stage)).overwritePartitions()
-            self._record_metrics(stage, time.time() - t0, files=[])
-        else:
-            self._drop_empty_root_files(stage)
-            before = set(self._stage_files(stage))
-            # per-WRITE dynamic mode (ADVICE r3): scoping the option to
-            # this writer instead of mutating the session conf means a
-            # concurrent overwrite in the same SparkSession (streaming
-            # foreachBatch alongside another job) cannot silently pick up
-            # dynamic semantics from our window
-            df.write.mode("overwrite") \
-                .option("partitionOverwriteMode", "dynamic") \
-                .partitionBy(*partition_by).parquet(self.path(stage))
-            new_files = [f for f in self._stage_files(stage)
-                         if f not in before]
-            self._record_metrics(stage, time.time() - t0, files=new_files)
-        with self._lock:
-            m = self._manifest()
-            entry = m["stages"].setdefault(stage, {"path": self.path(stage)})
-            entry["ts"] = time.time()
-            entry["partition_overwrites"] = int(
-                entry.get("partition_overwrites", 0)) + 1
-            if self.backend == "iceberg":
-                entry["snapshot_id"] = self._current_snapshot(stage)
-            if info:
-                entry.update(info)
-            self._save_manifest(m)
-        return self.load(stage)
 
     def _drop_empty_root_files(self, stage: str) -> None:
         """Before a partitioned parquet write: a stage written by the
-        empty-flat fallback (see write) holds a 0-row ROOT-LEVEL file, and
+        empty-flat fallback (see _put) holds a 0-row ROOT-LEVEL file, and
         a partitioned write on top would mix layouts and break partition
         discovery on the next load (ADVICE r4). Only provably-empty root
         files are removed — a non-empty root file means the caller is
@@ -322,16 +298,12 @@ class CheckpointCatalog:
 
     def clear_partitions(self, stage: str, col: str,
                          values: list) -> None:
-        """Explicitly EMPTY the given partitions of a partitioned stage
-        table. Dynamic partition overwrite replaces only partitions that
-        appear in the written df — it cannot clear a partition to zero
-        rows (ADVICE r3 high: if every row of a touched partition was
-        relabeled into other partitions and no survivor remains, the stale
-        files would survive the overwrite and affected members would exist
-        TWICE in the table). Callers diff intended-touched against
-        actually-present partition values and clear the difference inside
-        the delta's pending window. Parquet: delete the hive dirs;
-        Iceberg: a metadata-only DELETE on the partition predicate."""
+        """EMPTY the given partitions of a partitioned stage table — the
+        first half of overwrite_partitions, so a listed partition that
+        receives no new rows ends up empty (an incremental append whose
+        every row of a touched partition relabeled elsewhere). Parquet:
+        delete the hive dirs; Iceberg: a metadata-only DELETE on the
+        partition predicate."""
         if not values:
             return
         if self.backend == "iceberg":

@@ -57,9 +57,13 @@ def _run_stages(spark: SparkSession, images: DataFrame,
                 extensions: bool, evaluate: bool, refine: bool) -> dict:
     out: dict[str, DataFrame] = {}
     timings: dict[str, float] = {}
+    ext_future = ext_pool = None
 
     def stage(name: str, build, partition_by: list[str] | None = None,
               info: dict | None = None):
+        # a failed extension chain stops the main chain at its next stage
+        if ext_future is not None and ext_future.done():
+            ext_future.result()
         t0 = time.time()
         if cat.is_complete(name):
             out[name] = cat.load(name)
@@ -99,7 +103,6 @@ def _run_stages(spark: SparkSession, images: DataFrame,
     # fresh 20k-row e2e). The catalog's manifest/metrics mutations are
     # lock-serialized; ``out``/``timings`` entries are per-stage keys.
     need_membership = refine or not cat.is_complete("cc")
-    ext_future = ext_pool = None
     if extensions:
         from concurrent.futures import ThreadPoolExecutor
         ext_pool = ThreadPoolExecutor(max_workers=1)
@@ -166,14 +169,14 @@ def _run_stages(spark: SparkSession, images: DataFrame,
 
     cc_in = cc_input
     # cc and clusters are hash-partitioned on the component id (CC_LAYOUT)
-    # so incremental appends dynamic-overwrite only delta-touched
-    # partitions instead of rewriting the corpus-sized tables. The
-    # .repartition(cc_parts, "p") before each write routes every partition
-    # VALUE wholly into one task — one file per hive dir, and the write's
-    # injected sort-by-partition-col becomes a near-noop per task. The
-    # explicit count pins the exchange: a bare repartition("p") joins AQE
-    # partition coalescing, which would collapse a small table to 1-2
-    # tasks and serialize a many-dir write
+    # so incremental appends replace (clear, then append) only
+    # delta-touched partitions instead of rewriting the corpus-sized
+    # tables. The .repartition(cc_parts, "p") before each write routes
+    # every partition VALUE wholly into one task — one file per hive dir,
+    # and the write's injected sort-by-partition-col becomes a near-noop
+    # per task. The explicit count pins the exchange: a bare
+    # repartition("p") joins AQE partition coalescing, which would
+    # collapse a small table to 1-2 tasks and serialize a many-dir write
     layout = {"cc_layout": cc_stage.CC_LAYOUT, "cc_parts": cc_parts}
     if not cat.is_complete("cc"):
         # fresh build of BOTH tables: materialize the labeling once and

@@ -295,11 +295,12 @@ def incremental_components_parts(old_cc: DataFrame, new_edges: DataFrame,
     with their merged labels, as the dispatcher returns them (already
     materialized) — SMALL (only components the delta actually collides
     with) and the only rows superseding existing table content, so a
-    partitioned table dynamic-overwrites just their partitions.
+    partitioned table replaces just their partitions.
     ``singles`` = delta ids in no multi bucket — brand-new keys
-    superseding nothing, so they APPEND as new files without touching any
-    existing partition (they hash-scatter by own id; overwriting their
-    partitions would rewrite the whole table and defeat the point).
+    superseding nothing, so they ride along in the same write and land as
+    new files wherever their partition is not replaced (they hash-scatter
+    by own id; replacing their partitions would rewrite the whole table
+    and defeat the point).
     Everything else is byte-identical to old_cc: the full table is
     ``old_cc`` minus the affected components, plus ``relabeled`` and
     ``singles``."""
@@ -386,8 +387,8 @@ def with_cc_partition(cc: DataFrame, parts: int) -> DataFrame:
     """Attach the cc checkpoint's partition column:
     p = pmod(xxhash64(cc_id), parts). Hash-partitioning on the COMPONENT
     id means an incremental append touches only the partitions of the
-    affected components' old and new labels — the dynamic-overwrite append
-    path (checkpoint.overwrite_partitions)."""
+    affected components' old and new labels — the partition-replacement
+    append path (checkpoint.overwrite_partitions)."""
     return cc.withColumn(
         "p", F.pmod(F.xxhash64("cc_id"), F.lit(parts)).cast("int"))
 
@@ -398,7 +399,7 @@ def with_clusters_partition(cl: DataFrame, parts: int) -> DataFrame:
     cc table (with_cc_partition) — so one component's cc rows and cluster
     rows land in the SAME partition number p, and an incremental append's
     touched-partition set (computed once from the affected/relabeled
-    components) drives the dynamic overwrite of both tables."""
+    components) drives the partition replacement of both tables."""
     return cl.withColumn(
         "p", F.pmod(F.xxhash64("rep"), F.lit(parts)).cast("int"))
 

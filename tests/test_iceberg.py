@@ -221,10 +221,10 @@ class TestIcebergBranch:
 
     def test_clear_partitions_issues_partition_delete(self, spark, cfg,
                                                       tmp_path):
-        """clear_partitions (ADVICE r3 high: emptied partitions must be
-        cleared explicitly — overwritePartitions cannot write zero rows
-        into a partition) maps to a metadata DELETE on the partition
-        predicate on the Iceberg branch; empty value list = no SQL."""
+        """clear_partitions maps to a metadata DELETE on the partition
+        predicate on the Iceberg branch; empty value list = no SQL. A
+        partition replacement (overwrite_partitions) is that DELETE on
+        the listed partitions, then one append whose snapshot advances."""
         stub = IcebergStubSpark(spark)
         cat = CheckpointCatalog(stub, str(tmp_path), cfg, backend="iceberg")
         cat.write("cc", FakeDF(stub), partition_by=["p"])
@@ -233,6 +233,22 @@ class TestIcebergBranch:
             "DELETE FROM local.apollo.cc WHERE p IN (3, 7)"]
         cat.clear_partitions("cc", "p", [])
         assert len(stub.deletes) == 1
+
+        snap = cat.stage_info("cc")["snapshot_id"]
+        writers = len(stub.writers)
+        real_append = stub.append_snapshot
+
+        def append_after_delete(tbl):
+            assert len(stub.deletes) == 2, "append ran before the DELETE"
+            real_append(tbl)
+
+        stub.append_snapshot = append_after_delete
+        assert cat.overwrite_partitions(
+            "cc", FakeDF(stub), ["p"], [1, 4]) is None
+        assert stub.deletes[1:] == [
+            "DELETE FROM local.apollo.cc WHERE p IN (1, 4)"]
+        assert len(stub.writers) == writers + 1
+        assert cat.stage_info("cc")["snapshot_id"] > snap
 
     def test_append_delta_metrics_and_snapshot_advance(self, spark, cfg,
                                                        tmp_path):
