@@ -126,7 +126,7 @@ def flagship_query_local(docs_parquet: str, cfg: PipelineConfig
     documents-as-images corpus: (corpus bags, query bag, query signature
     blob, ndocs). The query doc is the corpus row with the MIN image_id,
     re-labeled 'query-new' and weighted against the corpus vocabulary
-    (stages/bags.tfidf_with_vocab semantics: join to the saved df table,
+    (stages/bags.weight_bags semantics: join to the saved df table,
     log-tf-log-idf x namespace multiplier, weight>0, reference
     hasher.py:208-234 / query.py:47-56). Feeds the query_by_image DuckDB
     oracle: corpus bands replay from signature literals, the query's

@@ -17,8 +17,10 @@ import argparse
 import json
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 from apollo_spark.checkpoint import CheckpointCatalog
 from apollo_spark.config import DEFAULT, PipelineConfig
@@ -42,7 +44,7 @@ def run_pipeline(spark: SparkSession, images: DataFrame,
     spans the derived-stage rebuilds performed here."""
     cat = cat or CheckpointCatalog(spark, out_dir, cfg, backend=backend)
     # One metrics flush for the whole run (round-5): a fresh build performs
-    # ~9 stage writes, and each write-through metrics append is its own
+    # ~8 stage writes, and each write-through metrics append is its own
     # ~0.5-1s driver-blocking job — a serial cost that the 1->4 scaling
     # measurement pays identically at both levels. Stage data + manifest
     # completeness stay eager; only telemetry rows are deferred. Nested
@@ -57,7 +59,7 @@ def _run_stages(spark: SparkSession, images: DataFrame,
                 extensions: bool, evaluate: bool, refine: bool) -> dict:
     out: dict[str, DataFrame] = {}
     timings: dict[str, float] = {}
-    ext_future = ext_pool = None
+    ext_future = None
 
     def stage(name: str, build, partition_by: list[str] | None = None,
               info: dict | None = None):
@@ -79,58 +81,53 @@ def _run_stages(spark: SparkSession, images: DataFrame,
     # cc/clusters hive layout: cc_parts partitions, sized from the corpus
     # when cc is built (stages.cc.cc_partitions) and recorded in both
     # manifest entries. Appends keep the recorded count while the corpus
-    # grows; once it needs twice that, cc and the tables derived for it
-    # are dropped here and rebuilt below at the new count — one relayout
-    # per doubling, so the cost per appended row stays constant. A cc
-    # entry without a count (or no cc at all) rebuilds the same way.
+    # grows; once it needs twice that, cc and clusters are dropped here
+    # and rebuilt below at the new count — one relayout per doubling, so
+    # the cost per appended row stays constant. A cc entry without a
+    # count (or no cc at all) rebuilds the same way, and so does one
+    # built without the extension edges this run asks for.
     cc_parts = cc_stage.cc_partitions(ndocs)
     if cat.is_complete("cc"):
-        recorded = cat.stage_info("cc").get("cc_parts", 0)
-        if cc_parts >= 2 * recorded:
-            cat.reset(["cc", "clusters", "substring_membership"])
+        info = cat.stage_info("cc")
+        recorded = info.get("cc_parts", 0)
+        if cc_parts >= 2 * recorded or (
+                extensions and not info.get("extensions")):
+            cat.reset(["cc", "clusters"])
         else:
             cc_parts = recorded
     elif cat.is_complete("clusters"):
         cat.reset(["clusters"])   # derived from cc: rebuilt with it
 
-    # The extension passes (simhash_pairs over phash, substring
-    # fingerprints + census over captions) depend only on ``images`` —
-    # not on the vocab/bags/signature chain — so they run CONCURRENTLY
-    # with it from a driver thread (guide §2.6 'overlap independent
-    # jobs': Spark schedules both jobs' tasks FIFO, the extension tasks
-    # back-fill slots the signature chain leaves idle during its
-    # driver round-trips and single-task phases; measured ~3 s off the
-    # fresh 20k-row e2e). The catalog's manifest/metrics mutations are
-    # lock-serialized; ``out``/``timings`` entries are per-stage keys.
-    need_membership = refine or not cat.is_complete("cc")
-    if extensions:
-        from concurrent.futures import ThreadPoolExecutor
-        ext_pool = ThreadPoolExecutor(max_workers=1)
+    # One pool for the whole run. The extension passes (simhash_pairs over
+    # phash, substring fingerprints over captions) depend only on
+    # ``images`` — not on the vocab/bags/signature chain — so they run
+    # CONCURRENTLY with it on one pool thread (guide §2.6 'overlap
+    # independent jobs': Spark schedules both jobs' tasks FIFO, the
+    # extension tasks back-fill slots the signature chain leaves idle
+    # during its driver round-trips and single-task phases; measured ~3 s
+    # off the fresh 20k-row e2e). Later the cc and clusters writes take
+    # both threads. The catalog's manifest/
+    # metrics mutations are lock-serialized; ``out``/``timings`` entries
+    # are per-stage keys. A raise in the main chain propagates as itself;
+    # leaving the block still waits for the extension thread, so its
+    # stages never race a caller's cleanup.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        if extensions:
+            def _ext_chain():
+                # APPENDABLE stages: incremental deltas extend them with
+                # delta-vs-corpus passes (incremental.py) instead of
+                # resetting
+                stage("simhash_pairs",
+                      lambda: candidates.simhash_pairs(images, cfg))
+                stage("substring_fp",
+                      lambda: candidates.substring_fingerprints(images, cfg))
 
-        def _ext_chain():
-            # simhash_pairs and substring_fp are APPENDABLE stages:
-            # incremental deltas extend them with delta-vs-corpus passes
-            # (incremental.py) instead of resetting. The census/membership
-            # is only needed by a cc REBUILD or by refinement — when the
-            # incremental-CC path already wrote cc (and no refine is
-            # requested) it is skipped entirely, not rebuilt into the void.
-            stage("simhash_pairs",
-                  lambda: candidates.simhash_pairs(images, cfg))
-            stage("substring_fp",
-                  lambda: candidates.substring_fingerprints(images, cfg))
-            if need_membership:
-                stage("substring_membership",
-                      lambda: candidates.membership_from_fp(
-                          out["substring_fp"], cfg))
+            ext_future = pool.submit(_ext_chain)
 
-        ext_future = ext_pool.submit(_ext_chain)
-
-    # extraction feeds both the vocab agg and the weight join — persist so
-    # the UDF runs once (unpersisted after the bags checkpoint lands)
-    from pyspark.storagelevel import StorageLevel
-    feats = bags_stage.extract_features(images, cfg) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+        # extraction feeds both the vocab agg and the weight join — persist
+        # so the UDF runs once (unpersisted after the signatures land)
+        feats = bags_stage.extract_features(images, cfg) \
+            .persist(StorageLevel.MEMORY_AND_DISK)
         # the frozen vocabulary (docfreq model analogue) — incremental
         # appends and interactive queries weight new docs against THIS
         # table
@@ -147,70 +144,58 @@ def _run_stages(spark: SparkSession, images: DataFrame,
         stage("signatures", lambda: hashst.signatures_auto(
             feats if bags_fresh else None, out["vocab"], ndocs,
             out["bags"], cfg))
-    finally:
-        # the extension thread must finish BEFORE feats unpersists only if
-        # it shared feats — it does not; but a raise above must still
-        # reap the thread so its stages don't race a caller's cleanup
-        if ext_future is not None:
+        feats.unpersist()
+        # partitioned by hashtable (O7 physical design): interactive band
+        # probes prune to the b matching partitions instead of a full scan
+        stage("bands", lambda: hashst.bands(out["signatures"], cfg),
+              partition_by=["hashtable"])
+
+        # CC membership is derived here, never checkpointed: it feeds the
+        # cc build and refinement
+        cc_in = out["bands"]
+        if extensions:
             ext_future.result()
-            ext_pool.shutdown()
-    feats.unpersist()
-    # partitioned by hashtable (O7 physical design): interactive band
-    # probes prune to the b matching partitions instead of a full scan
-    stage("bands", lambda: hashst.bands(out["signatures"], cfg),
-          partition_by=["hashtable"])
+            cc_in = candidates.cc_membership(
+                cc_in, cfg, out["simhash_pairs"], out["substring_fp"])
 
-    cc_input = out["bands"]
-    if extensions and need_membership:
-        cc_input = (cc_input
-                    .unionByName(candidates.pairs_as_membership(
-                        out["simhash_pairs"]))
-                    .unionByName(out["substring_membership"]))
-
-    cc_in = cc_input
-    # cc and clusters are hash-partitioned on the component id (CC_LAYOUT)
-    # so incremental appends replace (clear, then append) only
-    # delta-touched partitions instead of rewriting the corpus-sized
-    # tables. The .repartition(cc_parts, "p") before each write routes
-    # every partition VALUE wholly into one task — one file per hive dir,
-    # and the write's injected sort-by-partition-col becomes a near-noop
-    # per task. The explicit count pins the exchange: a bare
-    # repartition("p") joins AQE partition coalescing, which would
-    # collapse a small table to 1-2 tasks and serialize a many-dir write
-    layout = {"cc_layout": cc_stage.CC_LAYOUT, "cc_parts": cc_parts}
-    if not cat.is_complete("cc"):
-        # fresh build of BOTH tables: materialize the labeling once and
-        # write the two tables from it CONCURRENTLY (they derive from the
-        # same checkpointed parent and target disjoint directories; the
-        # sequential form paid the clusters derivation after the cc write
-        # round-trip — guide §2.6 again)
+        # cc and clusters are hash-partitioned on the component id
+        # (CC_LAYOUT) so incremental appends replace (clear, then append)
+        # only delta-touched partitions instead of rewriting the
+        # corpus-sized tables. The .repartition(cc_parts, "p") before each
+        # write routes every partition VALUE wholly into one task — one
+        # file per hive dir, and the write's injected sort-by-partition-col
+        # becomes a near-noop per task. The explicit count pins the
+        # exchange: a bare repartition("p") joins AQE partition coalescing,
+        # which would collapse a small table to 1-2 tasks and serialize a
+        # many-dir write. A cc build materializes the labeling once and
+        # both tables are written from it CONCURRENTLY (disjoint
+        # directories, one checkpointed parent); over a complete cc,
+        # clusters derives from the table, at its recorded count.
+        layout = {"cc_layout": cc_stage.CC_LAYOUT, "cc_parts": cc_parts,
+                  "extensions": extensions}
         t0 = time.time()
-        cc_built = (cc_stage.with_cc_partition(
-            cc_stage.connected_components(cc_in, cfg, all_ids=images),
-            cc_parts)
-            .repartition(cc_parts, "p")
-            .localCheckpoint())
-        cl_built = (cc_stage.with_clusters_partition(
-            cc_stage.clusters(cc_built.select("image_id", "cc_id")),
-            cc_parts)
-            .repartition(cc_parts, "p"))
+        labels = None
+        if not cat.is_complete("cc"):
+            labels = (cc_stage.with_cc_partition(
+                cc_stage.connected_components(cc_in, cfg, all_ids=images),
+                cc_parts)
+                .repartition(cc_parts, "p")
+                .localCheckpoint())
         build_sec = time.time() - t0
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fcc = pool.submit(stage, "cc", lambda: cc_built, ["p"], layout)
-            fcl = pool.submit(stage, "clusters", lambda: cl_built, ["p"],
-                              layout)
-            fcc.result()
-            fcl.result()
-        timings["cc"] += build_sec   # attribute the shared labeling build
-    else:
-        out["cc"] = cat.load("cc")
-        # an incomplete clusters table over a complete cc is derived with
-        # cc's recorded partition count, so both tables keep one modulus
-        stage("clusters", lambda: cc_stage.with_clusters_partition(
-            cc_stage.clusters(out["cc"]), cc_parts)
-            .repartition(cc_parts, "p"),
-            partition_by=["p"], info=layout)
+
+        def _clusters():
+            cc_rows = cat.load("cc") if labels is None else labels
+            return (cc_stage.with_clusters_partition(
+                cc_stage.clusters(cc_rows.select("image_id", "cc_id")),
+                cc_parts)
+                .repartition(cc_parts, "p"))
+
+        fcc = pool.submit(stage, "cc", lambda: labels, ["p"], layout)
+        fcl = pool.submit(stage, "clusters", _clusters, ["p"], layout)
+        fcc.result()
+        fcl.result()
+    timings["cc"] += build_sec   # attribute the shared labeling build
+
     if refine:
         from apollo_spark.stages import refine as refine_stage
         stage("clusters_refined", lambda: refine_stage.refine_components(

@@ -197,7 +197,13 @@ def weight_bags(features: DataFrame, df_table: DataFrame, ndocs: int,
     per-namespace multipliers (hasher.py:102-131); weight <= 0 rows
     (features in every doc) drop, mirroring the dense path where zero
     weights never win the argmin (hasher.py:244-247). Features absent
-    from the vocabulary drop (P4/P6 pruning)."""
+    from the vocabulary drop (P4/P6 pruning).
+
+    Also the query / incremental-append path (H8): NEW docs are weighted
+    against the saved corpus vocabulary, as the reference hashes new
+    files over its stored OrderedDocumentFrequencies model
+    (hasher.py:208-234, query.py:47-56); AQE broadcasts whichever side is
+    small (a 1-row query or a bounded delta)."""
     mult = (F.when(F.col("ns") == NS_PHASH, F.lit(float(cfg.phash_weight)))
             .otherwise(F.lit(float(cfg.caption_weight))))
     weight = (F.log1p(F.col("tf").cast("double"))
@@ -219,16 +225,6 @@ def tfidf_bags(features: DataFrame, ndocs: int,
     from pyspark.storagelevel import StorageLevel
     features = features.persist(StorageLevel.MEMORY_AND_DISK)
     return weight_bags(features, vocab_table(features, cfg), ndocs, cfg)
-
-
-def tfidf_with_vocab(features: DataFrame, df_table: DataFrame, ndocs: int,
-                     cfg: PipelineConfig) -> DataFrame:
-    """TF-IDF for NEW docs against a saved corpus vocabulary — the query /
-    incremental-append path (H8): the reference hashes new files over the
-    stored OrderedDocumentFrequencies model (hasher.py:208-234,
-    query.py:47-56). Alias of weight_bags; AQE broadcasts whichever side
-    is small (a 1-row query or a bounded delta)."""
-    return weight_bags(features, df_table, ndocs, cfg)
 
 
 def run(images: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -18,9 +18,11 @@ counterpart — SURVEY.md §2.3 "axis ext" rows).
    membership rows. Gram hashes use the portable md5-60bit so the DuckDB
    oracle reproduces the pass bit-for-bit.
 
-Both passes integrate with the CC fixpoint either as pair-edges
-(``pairs_as_membership``) or directly as bucket membership, unioned with the
-WMH bands before label propagation.
+Both passes feed CC as extra membership rows beside the WMH bands: the
+verified phash pairs as pair-edges (``pairs_as_membership``), the surviving
+fingerprint buckets directly (``membership_from_fp``). ``cc_membership``
+composes the union for the fresh build and the incremental append alike;
+it is derived where CC and refinement read it, never checkpointed.
 """
 
 from __future__ import annotations
@@ -31,8 +33,7 @@ from pyspark.sql import functions as F
 
 from apollo_spark.config import PipelineConfig
 
-SIMHASH_HT = -1      # hashtable ids for synthetic (non-WMH) membership rows
-SUBSTRING_HT = -2
+SUBSTRING_HT = -2    # hashtable ids for synthetic (non-WMH) membership rows
 EDGE_HT = -3
 
 _BLOCKS = 4          # 4 x 16-bit blocks -> guarantees Hamming <= 3
@@ -180,14 +181,31 @@ def simhash_pairs_delta(new_images: DataFrame, all_images: DataFrame,
             .distinct())
 
 
-def pairs_as_membership(pairs: DataFrame, hashtable: int = EDGE_HT) -> DataFrame:
+def pairs_as_membership(pairs: DataFrame) -> DataFrame:
     """(a, b) verified pairs -> two membership rows per pair with a unique
     synthetic bucket key, so the CC fixpoint consumes edges and buckets
     uniformly."""
     key = F.encode(F.concat_ws("|", F.col("a"), F.col("b")), "utf-8") \
         .alias("band")
     a = pairs.select(F.col("a").alias("image_id"),
-                     F.lit(hashtable).alias("hashtable"), key)
+                     F.lit(EDGE_HT).alias("hashtable"), key)
     b = pairs.select(F.col("b").alias("image_id"),
-                     F.lit(hashtable).alias("hashtable"), key)
+                     F.lit(EDGE_HT).alias("hashtable"), key)
     return a.unionByName(b)
+
+
+def cc_membership(bands: DataFrame, cfg: PipelineConfig,
+                  pairs: DataFrame | None = None,
+                  fp: DataFrame | None = None) -> DataFrame:
+    """CC input (image_id, hashtable, band): the WMH ``bands`` plus, when
+    given, the verified phash ``pairs`` as pair-edges and the census of
+    the substring fingerprints ``fp``. The fresh build passes its full
+    tables; the incremental append passes the bands of the delta's
+    buckets, the delta's new pairs and the fingerprints of the touched
+    ``gh`` values, so the census counts each touched bucket corpus-wide."""
+    memb = bands
+    if pairs is not None:
+        memb = memb.unionByName(pairs_as_membership(pairs))
+    if fp is not None:
+        memb = memb.unionByName(membership_from_fp(fp, cfg))
+    return memb

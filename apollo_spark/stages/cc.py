@@ -33,15 +33,6 @@ from pyspark.sql import functions as F
 from apollo_spark.config import PipelineConfig
 
 
-def multi_member_bands(bands: DataFrame) -> DataFrame:
-    """Membership restricted to buckets with >= 2 docs (A3 size guard)."""
-    sizes = (bands.groupBy("hashtable", "band")
-             .agg(F.count(F.lit(1)).alias("n")))
-    return (bands.join(sizes.filter("n >= 2").select("hashtable", "band"),
-                       ["hashtable", "band"])
-            .select("image_id", "hashtable", "band"))
-
-
 def star_edges(bands: DataFrame) -> DataFrame:
     """Contract each multi-member bucket to star edges (image_id, rep) with
     rep = min image_id of the bucket. One groupBy + one join over the

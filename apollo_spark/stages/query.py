@@ -66,7 +66,7 @@ def query_image(image: DataFrame, df_table: DataFrame, ndocs: int,
     saved docfreq model, CPU-hash, slice bands, probe).
 
     ``image`` is a 1-row DataFrame in the images schema. Its features are
-    weighted against the saved vocabulary (tfidf_with_vocab), hashed by the
+    weighted against the saved vocabulary (weight_bags), hashed by the
     same WMH kernel, banded, and probed against the corpus ``bands`` with a
     broadcast semi-join; candidates re-rank by sparse weighted Jaccard
     against the corpus ``bags``. Everything stays distributed except the
@@ -75,7 +75,7 @@ def query_image(image: DataFrame, df_table: DataFrame, ndocs: int,
     from apollo_spark.stages import hashst
 
     qfeats = bags_stage.extract_features(image, cfg, widen=False)
-    qbags = bags_stage.tfidf_with_vocab(qfeats, df_table, ndocs, cfg) \
+    qbags = bags_stage.weight_bags(qfeats, df_table, ndocs, cfg) \
         .localCheckpoint()
     _, qbands = hashst.run(qbags, cfg)
     qid = image.first()["image_id"]

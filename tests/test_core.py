@@ -347,7 +347,7 @@ def test_flagship_query_parity(spark):
     qrow = images.filter(F.col("image_id") == qsrc) \
         .withColumn("image_id", F.lit("query-new"))
     qfeats = bags_stage.extract_features(qrow, cfg)
-    qbags_spark = bags_stage.tfidf_with_vocab(qfeats, vocab, ndocs, cfg)
+    qbags_spark = bags_stage.weight_bags(qfeats, vocab, ndocs, cfg)
     # Spark carries feat_hash as signed int32, the host twin as uint32 —
     # same 32 bits (the literal oracle is internally consistent either
     # way); normalize for the comparison
